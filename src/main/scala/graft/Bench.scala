@@ -371,7 +371,12 @@ object Bench {
     // statistic (the one-line `queries` map and every lane total are
     // min-based; r16's tail kept the rep1 line only because it printed
     // last, which made the driver's r16 per-query table the first-run
-    // statistic by accident — VERDICT r16 §measurement finding)
+    // statistic by accident — VERDICT r16 §measurement finding).
+    // A strictly tail-bounded capture therefore drops the perq_rep1
+    // chunks. The rep1 statistic stays recoverable two ways: the
+    // "rep1" key of bench_perq.json (written next to the run, in the
+    // CWD), and the one-line `[bench] rep1 {...}` map printed to stderr
+    // above, which a full stderr capture keeps.
     chunked("perq_rep1", r1Entries)
     chunked("perq", minEntries)
     try {

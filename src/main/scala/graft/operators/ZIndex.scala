@@ -146,7 +146,9 @@ object ZIndex {
     * unchanged corpus pays one feed listStatus. */
   private val memo =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-  def clearMemo(): Unit = { memo.clear(); entryMemo.clear() }
+  def clearMemo(): Unit = {
+    memo.clear(); entryMemo.clear(); schemaMemo.clear()
+  }
 
   private val rootLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
@@ -848,6 +850,13 @@ object ZIndex {
         countDistinct(col("l_suppkey")).as("n_supp"))
       .orderBy(col("l_returnflag"))
 
+  /** root → (feed stamp, relation schema): [[zFrame]]'s schema keyed
+    * on the same feed identity [[ensure]]'s memo keys on. A repeat
+    * relation over an unchanged feed plans with no Spark job before its
+    * query; a changed stamp re-infers. One entry per root. */
+  private val schemaMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
+
   /** The z-layout as an UNFILTERED relation over
     * [[graft.plans.ZoneMapFileIndex]], plus its index — the spec
     * surface for planner-side pruning with arbitrary predicates. */
@@ -861,7 +870,16 @@ object ZIndex {
       new org.apache.hadoop.fs.Path(r),
       () => resolveEntries(spark, dir, t))
     lastPlannedIndex.set(Some(index))
-    val schema = t.load(spark, dir).schema
+    val stamp = stampOf(listFeed(spark, dir, t))
+    val schema = Option(schemaMemo.get(r)) match {
+      case Some((s, sch)) if s == stamp => sch
+      case _ =>
+        // inference is a parquet footer job: once per feed generation,
+        // and the put replaces the superseded generation's entry
+        val sch = t.load(spark, dir).schema
+        schemaMemo.put(r, (stamp, sch))
+        sch
+    }
     val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
       index, new StructType(), schema, None,

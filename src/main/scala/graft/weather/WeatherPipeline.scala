@@ -328,6 +328,15 @@ object WeatherPipeline {
   /** Forecast-horizon endpoint (reference `weather.py:114-137`, O2): future
     * targets for a postal code from the latest issue, ascending — with the
     * INTERVAL parameter typed instead of string-interpolated (SURVEY §8 Q12).
+    *
+    * The result is bounded (one postal code × the horizon's hours × the
+    * issues covering them), so it is sorted inside ONE partition: the
+    * plan has no range exchange, and over the zone-mapped serve relation
+    * a call is a single Spark job. Trade-off: `coalesce(1)` is narrow,
+    * so everything after the input's last shuffle (here the filtered
+    * scan) runs as one task. Over the z-laid-out gold that scan is
+    * pruned to a few files; over an unpruned gold it reads the whole
+    * table in that one task.
     */
   def forecastHorizon(gold: DataFrame, postalCode: String,
       from: Column, horizonHours: Int): DataFrame =
@@ -335,6 +344,7 @@ object WeatherPipeline {
         col("postal_code") === postalCode &&
         col("timestamp") > from &&
         col("timestamp") <= from + expr(s"INTERVAL $horizonHours HOURS"))
+      .coalesce(1)
       .orderBy(col("timestamp"), col("forecast_timestamp"))
 
   /** F8 bounding-box station filter (reference `stations.py:26-37`,

@@ -169,12 +169,23 @@ object WeatherQueries {
   // two-pass agg+rescan becomes one pruned read. RESULTS are pinned
   // unchanged (same oracles, and WeatherZServeSpec asserts parity with
   // the in-memory frames).
-  def latestObs(s: SparkSession, d: String): DataFrame =
-    WeatherZServe.latestObsServed(s, d)._1.orderBy(col("postal_code"))
 
+  /** Latest-observation snapshot, sorted inside ONE partition: the
+    * result is one hour's rows (at most one per postal code) read from
+    * the few files the max-timestamp literal admits, so a global sort's
+    * range-sampling job and shuffle would cost more than the sort. The
+    * plan has no range exchange: one Spark job per call. Trade-off: the
+    * pruned scan runs as a single task, and on the stats-less fallback
+    * (the two-pass view) that task reads the whole obs layout. */
+  def latestObs(s: SparkSession, d: String): DataFrame =
+    WeatherZServe.latestObsServed(s, d)._1
+      .coalesce(1).orderBy(col("postal_code"))
+
+  /** Latest-issue forecast snapshot, sorted inside one partition for the
+    * same reason and with the same trade-off as [[latestObs]]. */
   def latestFc(s: SparkSession, d: String): DataFrame =
     WeatherZServe.latestFcServed(s, d)._1
-      .orderBy(col("postal_code"), col("target_time"))
+      .coalesce(1).orderBy(col("postal_code"), col("target_time"))
 
   def nearest(s: SparkSession, d: String): DataFrame =
     WeatherPipeline.nearestStations(WeatherSynth.stations(s, d), WeatherSynth.postalCodes(s, d))

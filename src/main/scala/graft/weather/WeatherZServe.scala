@@ -84,6 +84,22 @@ object WeatherZServe {
       .map(t => KmvTable.stampOfPath(s, s"$d/$t"))
       .mkString("\n--\n")
 
+  /** The stamp-addressed landing path for this corpus. The source
+    * stamp (three listStatus calls) is computed by the caller's own
+    * thread, outside [[landed]]'s lock: every [[ZIndex.zFrame]] over
+    * gold reaches here through the layout's `feedOf`, and concurrent
+    * requests must not queue behind each other's file-system probes. */
+  private def goldPath(s: SparkSession, d: String): String = {
+    val stamp = sourceStamp(s, d)
+    s"${goldRoot(s)}/${md5hex(d).take(8)}/${md5hex(stamp).take(8)}" +
+      "/gold.parquet"
+  }
+
+  private def committedMarker(s: SparkSession, path: String): Boolean = {
+    val marker = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
+    marker.getFileSystem(s.sparkContext.hadoopConfiguration).exists(marker)
+  }
+
   /** The committed landing for this corpus stamp, if one already exists
     * on the durable root — a marker PROBE only, never a build (so
     * [[WeatherQueries]]' gold builders can serve from it without the
@@ -91,44 +107,37 @@ object WeatherZServe {
     * None on a cold root; the probe costs three source-stamp footer
     * reads plus one FS exists, KB-scale driver metadata. */
   private[weather] def committedGoldPath(
-      s: SparkSession, d: String): Option[String] =
-    landed.synchronized {
-      val stamp = sourceStamp(s, d)
-      val path = s"${goldRoot(s)}/${md5hex(d).take(8)}/" +
-        s"${md5hex(stamp).take(8)}/gold.parquet"
-      if (landed(path)) Some(path)
-      else {
-        val marker = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
-        val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(marker)) { landed += path; Some(path) } else None
-      }
-    }
+      s: SparkSession, d: String): Option[String] = {
+    val path = goldPath(s, d)
+    if (landed.synchronized(landed(path))) Some(path)
+    else if (committedMarker(s, path)) {
+      landed.synchronized { landed += path }
+      Some(path)
+    } else None
+  }
 
   /** Land the unified gold (observations + forecasts — the reference's
     * single `weather_data_gold` table) once per (JVM, corpus stamp);
     * returns the landed parquet path. The write is one pass over the
-    * already-memoized gold frames. */
-  private def landedGold(s: SparkSession, d: String): String =
+    * already-memoized gold frames. The lock covers only the set lookup
+    * and, on a miss, the landing itself. */
+  private def landedGold(s: SparkSession, d: String): String = {
+    val path = goldPath(s, d)
     landed.synchronized {
-      val stamp = sourceStamp(s, d)
-      val dir =
-        s"${goldRoot(s)}/${md5hex(d).take(8)}/${md5hex(stamp).take(8)}"
-      val path = s"$dir/gold.parquet"
       if (!landed(path)) {
         // the root is durable: a COMPLETE landing from a prior JVM
         // (parquet's own `_SUCCESS` commit marker) is reused as-is; a
         // crash leftover (no marker) is overwritten whole
-        val marker = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
-        val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker)) {
+        if (!committedMarker(s, path)) {
           landWrites.incrementAndGet()
           WeatherQueries.goldUnified(s, d)
             .write.mode("overwrite").parquet(path)
         }
         landed += path
       }
-      path
     }
+    path
+  }
 
   /** Gold's layout contract, ONE LAYOUT PER data_type (the
     * reference's gold is one table with a discriminator; splitting the

@@ -58,6 +58,31 @@ abstract class SparkSpec extends AnyFunSuite {
     case other => other.children.flatMap(fileScans)
   }
 
+  /** `f`'s result and the number of Spark jobs it launched. Suites share
+    * one context, so only jobs in a fresh job group set on this thread
+    * are counted; the listener bus is drained before the count is read. */
+  def countJobs[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"count-jobs-${java.util.UUID.randomUUID}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val r = f
+      org.apache.spark.graft.TestBus.drain(sc)
+      (r, n.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   /** Run `f` against a freshly-built session (same SparkContext, its own
     * SessionState) whose builder is shaped by `customize`, restoring the
     * shared session as active/default afterwards. The new session stays on

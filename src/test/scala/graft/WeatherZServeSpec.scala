@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.functions._
 
@@ -20,7 +21,10 @@ import graft.plans.ZoneMapFileIndex
   *     couple of files and return EXACTLY the in-memory frames' rows;
   * (4) every serve query equals its in-memory pipeline computation —
   *     the layout moves the scan, never the answer (the driver's
-  *     unchanged oracles pin the same thing against DuckDB). */
+  *     unchanged oracles pin the same thing against DuckDB);
+  * (5) a warm API request (history, forecast horizon, latest
+  *     observations, latest forecasts) launches exactly ONE Spark job,
+  *     its query: no per-call schema inference, no range-sort jobs. */
 class WeatherZServeSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
@@ -133,5 +137,34 @@ class WeatherZServeSpec extends SparkSpec {
       s"the fc layout clusters on the ISSUE axis, so the max-issue " +
         s"literal must refute at least some files " +
         s"(${fcIdx.lastKept.get()} of ${fcIdx.lastTotal.get()})")
+  }
+
+  test("a warm API request launches exactly one Spark job and returns " +
+      "the endpoint's rows over plain gold") {
+    val plain = WeatherQueries.goldUnified(spark, dir)
+    val from = lit("2024-01-28 00:00:00").cast("timestamp")
+    // (endpoint, a fresh request over the z-laid-out gold, the same
+    // endpoint over plain gold)
+    val endpoints: Seq[(String, () => DataFrame, DataFrame)] = Seq(
+      ("history", () => WeatherPipeline.history(
+          WeatherZServe.zGold(spark, dir), "10011", 72, 24),
+        WeatherPipeline.history(plain, "10011", 72, 24)),
+      ("horizon", () => WeatherPipeline.forecastHorizon(
+          WeatherZServe.zGold(spark, dir), "10011", from, 48),
+        WeatherPipeline.forecastHorizon(plain, "10011", from, 48)),
+      ("latestObs", () => WeatherQueries.latestObs(spark, dir),
+        WeatherPipeline.latestObservations(plain)
+          .orderBy(col("postal_code"))),
+      ("latestFc", () => WeatherQueries.latestFc(spark, dir),
+        WeatherPipeline.latestForecasts(plain)
+          .orderBy(col("postal_code"), col("target_time"))))
+    endpoints.foreach { case (name, served, truth) =>
+      served().collect() // warm: lands gold, builds the layouts
+      val (rows, jobs) = countJobs(served().collect().toSeq)
+      assert(jobs === 1,
+        s"$name: a warm request must launch exactly one Spark job")
+      assert(rows.nonEmpty && rows === truth.collect().toSeq,
+        s"$name: the served rows must equal the endpoint over plain gold")
+    }
   }
 }

@@ -17,7 +17,11 @@ import graft.plans.{AllNullZone, LongZone, StringZone}
   * (4) the generalized shapes — IN lists, IsNull/IsNotNull, OR-of-
   *     ranges, STRING zones — prune exactly the files a driver-side
   *     consult of the same entries keeps, and answers match the plain
-  *     table on every one. Counters are PER INDEX. */
+  *     table on every one. Counters are PER INDEX;
+  * (5) a repeated relation over an unchanged feed launches no Spark
+  *     job (the schema is memoized on the feed identity), and after an
+  *     append or a mutation its schema and rows follow the new
+  *     generation. */
 class ZoneMapFileIndexSpec extends SparkSpec {
 
   // zConfLock: the z-layout suites all steer spark.graft.zindex.dir on
@@ -205,6 +209,46 @@ class ZoneMapFileIndexSpec extends SparkSpec {
       idx.refresh() // stamp-miss → incremental append lands, new entries
       assert(frame.count() === 7000L,
         "after refresh the SAME DataFrame must see the appended rows")
+    }
+  }
+
+  test("zFrame: a repeat over an unchanged feed launches zero jobs; " +
+      "after an append or a mutation the schema and rows follow the " +
+      "new generation") {
+    val dir = TempDirs.create("graft_zmfi_corp5")
+    val feed = s"$dir/lineitem.parquet"
+    li(0 until 4000).write.mode("overwrite").parquet(feed)
+    withConfs("spark.graft.zindex.dir" -> TempDirs.create("graft_zmfi_root5")) {
+      ZIndex.clearMemo()
+      val (first, _) = ZIndex.zFrame(spark, dir)
+      assert(first.count() === 4000L)
+      val ((again, _), jobs) = countJobs(ZIndex.zFrame(spark, dir))
+      assert(jobs === 0,
+        "a repeat relation over an unchanged feed must not infer its " +
+          "schema again")
+      assert(again.schema === first.schema)
+
+      // append: the stamp changes, the schema is re-inferred and the
+      // rows follow the appended generation
+      li(4000 until 5000).write.mode("append").parquet(feed)
+      val ((appended, _), appendJobs) = countJobs(ZIndex.zFrame(spark, dir))
+      assert(appendJobs >= 1, "a changed feed must re-infer the schema")
+      assert(appended.schema === spark.read.parquet(feed).schema)
+      assert(appended.count() === 5000L)
+
+      // mutation: the feed is rewritten with an added column; the new
+      // relation carries it, and its rows equal the rewritten feed
+      li(0 until 3000).withColumn("l_tax", col("l_suppkey") % 7)
+        .write.mode("overwrite").parquet(feed)
+      val (mutated, _) = ZIndex.zFrame(spark, dir)
+      val raw = spark.read.parquet(feed)
+      assert(mutated.schema === raw.schema)
+      assert(mutated.schema.fieldNames.contains("l_tax"))
+      def tally(df: org.apache.spark.sql.DataFrame) = df
+        .groupBy(col("l_returnflag"))
+        .agg(count(lit(1)), sum(col("l_tax")))
+        .orderBy(col("l_returnflag")).collect().toSeq
+      assert(tally(mutated) === tally(raw))
     }
   }
 }
