@@ -148,6 +148,8 @@ object ZIndex {
     new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
   def clearMemo(): Unit = {
     memo.clear(); entryMemo.clear(); schemaMemo.clear()
+    // the weather serve relations are built from these memos
+    graft.weather.WeatherZServe.clearServed()
   }
 
   private val rootLocks =

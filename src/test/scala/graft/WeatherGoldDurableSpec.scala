@@ -11,13 +11,16 @@ import graft.weather.WeatherZServe
   *     the ZIndex stamp memo, the scan-swap registry) re-resolves the
   *     SAME committed generation from disk — no gold re-land
   *     (landWrites unchanged) and no recluster (same (root, gen)) —
-  *     and the heartbeat still serves. */
+  *     and the heartbeat still serves; the serve relations are rebuilt
+  *     from disk too, over the same generations. */
 class WeatherGoldDurableSpec extends SparkSpec {
 
   test("a fresh JVM re-arms the gold serve from the durable root: " +
       "same committed generation, no re-land, heartbeat still serves") {
     // warm: land + cluster (or re-resolve a prior run's durable state)
     WeatherZServe.q182GoldHeartbeat(spark, Sf).collect()
+    WeatherZServe.zGold(spark, Sf)
+    val served0 = WeatherZServe.servedGenerations(spark, Sf)
     val t = WeatherZServe.goldAllTable(spark, Sf)
     val (r1, g1) = ZIndex.ensure(spark, Sf, t)
     assert(!r1.contains("graft_wx_gold_"),
@@ -32,6 +35,13 @@ class WeatherGoldDurableSpec extends SparkSpec {
     val w0 = WeatherZServe.landWrites.get()
     val rows = WeatherZServe.q182GoldHeartbeat(spark, Sf).collect()
     assert(rows.nonEmpty)
+    assert(WeatherZServe.servedGenerations(spark, Sf).isEmpty,
+      "the fresh-JVM hooks must drop the held serve relations")
+    val b0 = WeatherZServe.servedBuilds.get()
+    WeatherZServe.zGold(spark, Sf)
+    assert(WeatherZServe.servedBuilds.get() === b0 + 1 &&
+      WeatherZServe.servedGenerations(spark, Sf) === served0,
+      "the serve relations must re-resolve the same generations from disk")
     val (r2, g2) = ZIndex.ensure(spark, Sf, WeatherZServe.goldAllTable(spark, Sf))
     assert((r1, g1) === ((r2, g2)),
       "an unchanged corpus must re-resolve the SAME committed " +

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.functions._
 
 import graft.weather.{WeatherPipeline, WeatherQueries, WeatherZServe}
@@ -12,8 +11,7 @@ import graft.plans.ZoneMapFileIndex
   * (1) q27's (postal, time-window) predicate opens files_opened ≪
   *     files_total through the FileIndex — the reference's composite
   *     B-tree serve path (`sql/schema.sql:278-305`) as zone skipping —
-  *     and the forecast layout is refuted ENTIRELY off its constant
-  *     data_type zone;
+  *     and the forecast layout is refuted entirely: not even scanned;
   * (2) q177's postal PREFIX pushes as StartsWith and prunes;
   * (3) the INDEX-SERVED latest snapshots (q24/q25: global max taken
   *     from the timestamp zones and pushed as a literal — the
@@ -24,19 +22,30 @@ import graft.plans.ZoneMapFileIndex
   *     unchanged oracles pin the same thing against DuckDB);
   * (5) a warm API request (history, forecast horizon, latest
   *     observations, latest forecasts) launches exactly ONE Spark job,
-  *     its query: no per-call schema inference, no range-sort jobs. */
+  *     its query: no per-call schema inference, no range-sort jobs;
+  * (6) a warm request reuses the held relation (one source stamp, no
+  *     rebuild), and history/horizon plan ONE scan, over their own
+  *     type's layout;
+  * (7) a corpus changed in place is served from its new landing's
+  *     generation, and each session gets its own relation.
+  * Files opened are read from each query's own executed plan (the scan's
+  * `numFiles` metric), not from the shared indexes' last-listing
+  * counters, which every request over the held relation overwrites. */
 class WeatherZServeSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def zoneScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      zoneScans(a.executedPlan)
-    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-      zoneScans(q.plan)
-    case s: FileSourceScanExec => Seq(s)
-    case other => other.children.flatMap(zoneScans)
-  }
+  /** The executed zone-mapped scans of an already-collected frame, with
+    * the files each opened. */
+  private def zoneScans(df: DataFrame): Seq[(ZoneMapFileIndex, Long)] =
+    fileScans(df.queryExecution.executedPlan).map(s =>
+      (s.relation.location, s.metrics("numFiles").value)).collect {
+      case (i: ZoneMapFileIndex, n) => (i, n)
+    }
+
+  /** Files the query opened through `idx`. */
+  private def opened(df: DataFrame, idx: ZoneMapFileIndex): Long =
+    zoneScans(df).collect { case (i, n) if i eq idx => n }.sum
 
   test("q27 history rides the zone-mapped relation: postal + window " +
       "prune most files and the forecast layout is refuted entirely; " +
@@ -52,15 +61,13 @@ class WeatherZServeSpec extends SparkSpec {
       .orderBy(col("timestamp")).collect().toSeq
     assert(zRows === memRows,
       "the z-served history must equal the pipeline-served history")
-    assert(obsIdx.lastKept.get() < obsIdx.lastTotal.get() / 2,
+    val total = obsIdx.currentEntries.size
+    assert(opened(served, obsIdx) < total / 2,
       s"one postal × 72h must prune most of the obs layout " +
-        s"(opened ${obsIdx.lastKept.get()} of ${obsIdx.lastTotal.get()})")
-    assert(fcIdx.lastKept.get() === 0L,
-      "an observation-only query must refute every forecast file " +
-        "off the constant data_type zone")
-    val scans = zoneScans(served.queryExecution.executedPlan)
-    assert(scans.exists(_.relation.location.isInstanceOf[ZoneMapFileIndex]),
-      "the serve scan must run over the zone-mapped FileIndex")
+        s"(opened ${opened(served, obsIdx)} of $total)")
+    assert(zoneScans(served).nonEmpty &&
+      zoneScans(served).forall(_._1 ne fcIdx),
+      "an observation-only query must not scan the forecast layout")
   }
 
   test("q177 region rollup: the postal PREFIX pushes as StartsWith, " +
@@ -77,14 +84,16 @@ class WeatherZServeSpec extends SparkSpec {
         min(col("temperature_min")).as("min_temp"),
         sum(col("num_stations").cast("long")).as("sum_stations"))
       .orderBy(col("postal_code"))
-    val zRows = rollup(zdf).collect().toSeq
+    val zq = rollup(zdf)
+    val zRows = zq.collect().toSeq
     val obsIdx = idxes.head
     assert(zRows.nonEmpty)
     assert(zRows === rollup(WeatherQueries.goldUnified(spark, dir))
       .collect().toSeq)
-    assert(obsIdx.lastKept.get() < obsIdx.lastTotal.get(),
+    val total = obsIdx.currentEntries.size
+    assert(opened(zq, obsIdx) < total,
       s"the 1001x prefix + 72h window must refute at least some files " +
-        s"(opened ${obsIdx.lastKept.get()} of ${obsIdx.lastTotal.get()})")
+        s"(opened ${opened(zq, obsIdx)} of $total)")
   }
 
   test("q179 gold stats heartbeat is metadata-served: no file scan, " +
@@ -92,7 +101,7 @@ class WeatherZServeSpec extends SparkSpec {
       "COUNT over derived NULL temperatures") {
     val df = WeatherZServe.q179GoldStats(spark, dir)
     val rows = df.collect().toSeq
-    assert(zoneScans(df.queryExecution.executedPlan).isEmpty,
+    assert(fileScans(df.queryExecution.executedPlan).isEmpty,
       "the stats heartbeat must fold to the zone map — no scan")
     val truth = WeatherQueries.goldUnified(spark, dir)
       .filter(col("data_type") === "observation")
@@ -117,54 +126,153 @@ class WeatherZServeSpec extends SparkSpec {
     val gold = WeatherQueries.goldUnified(spark, dir)
 
     val (obsDf, obsIdx) = WeatherZServe.latestObsServed(spark, dir)
-    val zObs = obsDf.orderBy(col("postal_code")).collect().toSeq
+    val obsQ = obsDf.orderBy(col("postal_code"))
+    val zObs = obsQ.collect().toSeq
     val mObs = WeatherPipeline.latestObservations(gold)
       .orderBy(col("postal_code")).collect().toSeq
     assert(zObs.nonEmpty && zObs === mObs,
       "the index-served latest observations must equal the two-pass view")
-    assert(obsIdx.lastKept.get() < obsIdx.lastTotal.get() / 2,
+    val obsTotal = obsIdx.currentEntries.size
+    assert(opened(obsQ, obsIdx) < obsTotal / 2,
       s"the max-timestamp literal must open a strict minority of " +
-        s"files (${obsIdx.lastKept.get()} of ${obsIdx.lastTotal.get()})")
+        s"files (${opened(obsQ, obsIdx)} of $obsTotal)")
 
     val (fcDf, fcIdx) = WeatherZServe.latestFcServed(spark, dir)
-    val zFc = fcDf.orderBy(col("postal_code"), col("target_time"))
-      .collect().toSeq
+    val fcQ = fcDf.orderBy(col("postal_code"), col("target_time"))
+    val zFc = fcQ.collect().toSeq
     val mFc = WeatherPipeline.latestForecasts(gold)
       .orderBy(col("postal_code"), col("target_time")).collect().toSeq
     assert(zFc.nonEmpty && zFc === mFc,
       "the index-served latest forecasts must equal the two-pass view")
-    assert(fcIdx.lastKept.get() < fcIdx.lastTotal.get(),
+    val fcTotal = fcIdx.currentEntries.size
+    assert(opened(fcQ, fcIdx) < fcTotal,
       s"the fc layout clusters on the ISSUE axis, so the max-issue " +
         s"literal must refute at least some files " +
-        s"(${fcIdx.lastKept.get()} of ${fcIdx.lastTotal.get()})")
+        s"(${opened(fcQ, fcIdx)} of $fcTotal)")
+  }
+
+  /** The four API endpoints as (name, a fresh request over the
+    * z-laid-out gold, the same endpoint over plain gold, the data_type
+    * whose layout alone its plan may scan — pinned for the two requests
+    * over the unified relation). */
+  private def endpoints(): Seq[(String, () => DataFrame, DataFrame,
+      Option[String])] = {
+    val plain = WeatherQueries.goldUnified(spark, dir)
+    val from = lit("2024-01-28 00:00:00").cast("timestamp")
+    Seq(
+      ("history", () => WeatherPipeline.history(
+          WeatherZServe.zGold(spark, dir), "10011", 72, 24),
+        WeatherPipeline.history(plain, "10011", 72, 24),
+        Some("observation")),
+      ("horizon", () => WeatherPipeline.forecastHorizon(
+          WeatherZServe.zGold(spark, dir), "10011", from, 48),
+        WeatherPipeline.forecastHorizon(plain, "10011", from, 48),
+        Some("forecast")),
+      ("latestObs", () => WeatherQueries.latestObs(spark, dir),
+        WeatherPipeline.latestObservations(plain)
+          .orderBy(col("postal_code")), None),
+      ("latestFc", () => WeatherQueries.latestFc(spark, dir),
+        WeatherPipeline.latestForecasts(plain)
+          .orderBy(col("postal_code"), col("target_time")), None))
   }
 
   test("a warm API request launches exactly one Spark job and returns " +
       "the endpoint's rows over plain gold") {
-    val plain = WeatherQueries.goldUnified(spark, dir)
-    val from = lit("2024-01-28 00:00:00").cast("timestamp")
-    // (endpoint, a fresh request over the z-laid-out gold, the same
-    // endpoint over plain gold)
-    val endpoints: Seq[(String, () => DataFrame, DataFrame)] = Seq(
-      ("history", () => WeatherPipeline.history(
-          WeatherZServe.zGold(spark, dir), "10011", 72, 24),
-        WeatherPipeline.history(plain, "10011", 72, 24)),
-      ("horizon", () => WeatherPipeline.forecastHorizon(
-          WeatherZServe.zGold(spark, dir), "10011", from, 48),
-        WeatherPipeline.forecastHorizon(plain, "10011", from, 48)),
-      ("latestObs", () => WeatherQueries.latestObs(spark, dir),
-        WeatherPipeline.latestObservations(plain)
-          .orderBy(col("postal_code"))),
-      ("latestFc", () => WeatherQueries.latestFc(spark, dir),
-        WeatherPipeline.latestForecasts(plain)
-          .orderBy(col("postal_code"), col("target_time"))))
-    endpoints.foreach { case (name, served, truth) =>
+    endpoints().foreach { case (name, served, truth, _) =>
       served().collect() // warm: lands gold, builds the layouts
       val (rows, jobs) = countJobs(served().collect().toSeq)
       assert(jobs === 1,
         s"$name: a warm request must launch exactly one Spark job")
       assert(rows.nonEmpty && rows === truth.collect().toSeq,
         s"$name: the served rows must equal the endpoint over plain gold")
+    }
+  }
+
+  test("a warm request reuses the held relation: one source stamp, no " +
+      "rebuild; history and horizon plan one scan, over their own " +
+      "type's layout") {
+    endpoints().foreach { case (name, served, truth, layout) =>
+      served().collect() // warm
+      val want = truth.collect().toSeq
+      val Seq(obsIdx, fcIdx) = WeatherZServe.zGoldWithIndexes(spark, dir)._2
+      val (p0, b0) = (WeatherZServe.stampProbes.get(),
+        WeatherZServe.servedBuilds.get())
+      val df = served()
+      val rows = df.collect().toSeq
+      assert(WeatherZServe.stampProbes.get() - p0 === 1,
+        s"$name: a warm request must compute the source stamp once")
+      assert(WeatherZServe.servedBuilds.get() === b0,
+        s"$name: a warm request must not build a new relation")
+      assert(rows.nonEmpty && rows === want,
+        s"$name: the served rows must equal the endpoint over plain gold")
+      layout.foreach { which =>
+        val idx = if (which == "observation") obsIdx else fcIdx
+        val scans = fileScans(df.queryExecution.executedPlan)
+        assert(scans.size === 1 && (scans.head.relation.location eq idx),
+          s"$name: the plan must hold exactly one scan, over the " +
+            s"$which layout (got ${scans.map(_.relation.location)})")
+      }
+    }
+  }
+
+  test("a corpus changed in place is served from its new landing's " +
+      "generation; each session gets its own relation") {
+    val corpus = TempDirs.create("wx_serve_fresh_")
+    val goldDir = TempDirs.create("wx_serve_fresh_gold_")
+    Seq("events", "customer", "nation").foreach(t => java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$dir/$t.parquet"),
+      java.nio.file.Paths.get(s"$corpus/$t.parquet")))
+    def history(gold: DataFrame) =
+      WeatherPipeline.history(gold, "10011", 168, 100)
+    def latestObsPlain() = WeatherPipeline.latestObservations(
+        WeatherQueries.goldUnified(spark, corpus))
+      .orderBy(col("postal_code")).collect().toSeq
+    TempDirs.zConfLock.synchronized {
+      spark.conf.set("spark.graft.weather.goldDir", goldDir)
+      try {
+        val before = WeatherQueries.latestObs(spark, corpus).collect().toSeq
+        assert(before.nonEmpty && before === latestObsPlain())
+        val Some(((_, obsGen0), (_, fcGen0))) =
+          WeatherZServe.servedGenerations(spark, corpus)
+
+        // a different feed: the corpus minus its last day, written by
+        // Spark over the copy's events.parquet
+        val ev = graft.sources.Tables.events(spark, corpus)
+        val lastDay = ev.agg(max(date_trunc("day", col("ts")))).head()
+          .getTimestamp(0)
+        val sub = TempDirs.create("wx_serve_fresh_sub_")
+        ev.filter(col("ts") < lit(lastDay)).coalesce(1)
+          .write.mode("overwrite").parquet(sub)
+        val part = java.nio.file.Files.list(java.nio.file.Paths.get(sub))
+          .filter(_.getFileName.toString.endsWith(".parquet"))
+          .findFirst().get()
+        java.nio.file.Files.copy(part,
+          java.nio.file.Paths.get(s"$corpus/events.parquet"),
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+
+        val after = WeatherQueries.latestObs(spark, corpus).collect().toSeq
+        val Some(((_, obsGen1), (_, fcGen1))) =
+          WeatherZServe.servedGenerations(spark, corpus)
+        assert(obsGen1 > obsGen0 && fcGen1 > fcGen0,
+          "the changed corpus must be served from new layout generations")
+        assert(after.nonEmpty && after != before,
+          "dropping the last day must move the latest observations")
+        assert(after === latestObsPlain(),
+          "latestObs must equal the endpoint over the new plain gold")
+        val zRows = history(WeatherZServe.zGold(spark, corpus)).collect()
+          .toSeq
+        assert(zRows.nonEmpty && zRows === history(
+          WeatherQueries.goldUnified(spark, corpus)).collect().toSeq,
+          "zGold must serve the new landing's rows")
+
+        withExtSession { ext =>
+          ext.conf.set("spark.graft.weather.goldDir", goldDir)
+          val z = WeatherZServe.zGold(ext, corpus)
+          assert((z.sparkSession eq ext) && (z.sparkSession ne spark),
+            "zGold must return a frame of the calling session")
+          assert(history(z).collect().toSeq === zRows)
+        }
+      } finally spark.conf.unset("spark.graft.weather.goldDir")
     }
   }
 }
