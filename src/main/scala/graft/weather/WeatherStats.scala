@@ -38,9 +38,16 @@ import graft.plans.{JoinSynopsis, SynopsisStats}
   */
 object WeatherStats {
 
-  private lazy val dimRoot: String =
-    java.nio.file.Files.createTempDirectory("graft_wx_dims_")
-      .toAbsolutePath.toString
+  private lazy val dimRoot: String = jvmTempRoot("graft_wx_dims_")
+
+  /** A fresh directory under the system tmpdir for this JVM's own
+    * landings, deleted with everything under it when the JVM exits
+    * (quietly: a failed delete never fails the exit). */
+  private[weather] def jvmTempRoot(prefix: String): String = {
+    val p = java.nio.file.Files.createTempDirectory(prefix).toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(p))
+    p.getAbsolutePath
+  }
 
   /** Stamp-addressed land dirs already written in this JVM. */
   private val landed = scala.collection.mutable.Set.empty[String]
@@ -49,26 +56,27 @@ object WeatherStats {
     * a hit means tables exist, point at this stamp's land dir, and
     * carry honest injected statistics. */
   private val dimMemo = new java.util.concurrent.ConcurrentHashMap[
-    (AnyRef, String), String]()
+    (AnyRef, String), Seq[String]]()
 
   /** Spec hook: a test that perturbs the dims' catalog statistics must
     * clear before re-calling [[dims]] to restore them (same discipline
     * as the CacheManager lesson on memoized frames). */
   def clearMemo(): Unit = dimMemo.clear()
 
-  private def md5hex(s: String): String =
+  /** The first 8 hex digits of `s`'s MD5: the weather modules' key for
+    * a corpus dir or a source stamp in a path or a table name. */
+  private[weather] def id8(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
 
-  private def id8(d: String): String = md5hex(d).take(8)
-
-  /** File-identity stamp of the dims' SOURCE tables (customer feeds
-    * stations, nation feeds postal — [[WeatherSynth]]): two RPC-cheap
-    * listStatus, the same identity discipline as KmvTable.feedStamp. */
-  private def sourceStamp(s: SparkSession, d: String): String =
-    Seq("customer.parquet", "nation.parquet")
-      .map(t => graft.operators.KmvTable.stampOfPath(s, s"$d/$t"))
-      .mkString("\n--\n")
+  /** File-identity stamp of corpus `d`'s source `tables`, one entry per
+    * table: an RPC-cheap listStatus each, the same identity discipline
+    * as KmvTable.feedStamp. The dims key on customer (feeds stations)
+    * and nation (feeds postal — [[WeatherSynth]]), so an events change
+    * never re-lands them; gold adds the events feed. */
+  private[weather] def sourceStamp(s: SparkSession, d: String,
+      tables: Seq[String]): Seq[String] =
+    tables.map(t => graft.operators.KmvTable.stampOfPath(s, s"$d/$t"))
 
   /** Catalog table names for a corpus dir (spec surface). */
   private[graft] def dimTableNames(d: String): (String, String) =
@@ -80,12 +88,13 @@ object WeatherStats {
   def dims(s: SparkSession, d: String): (DataFrame, DataFrame) =
     landed.synchronized {
       val (stTbl, pcTbl) = dimTableNames(d)
-      val stamp = sourceStamp(s, d)
+      val stamp =
+        sourceStamp(s, d, Seq("customer.parquet", "nation.parquet"))
       val memoKey = (s.sharedState: AnyRef, d)
       if (Option(dimMemo.get(memoKey)).contains(stamp) &&
           s.catalog.tableExists(stTbl) && s.catalog.tableExists(pcTbl))
         return (s.table(stTbl), s.table(pcTbl))
-      val root = s"$dimRoot/${id8(d)}/${md5hex(stamp).take(8)}"
+      val root = s"$dimRoot/${id8(d)}/${id8(stamp.mkString("\n--\n"))}"
       if (!landed(root)) {
         // stamp-addressed: a regenerated corpus lands to a NEW dir (the
         // old one stays — a concurrent session's analyzed frames may

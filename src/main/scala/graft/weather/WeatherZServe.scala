@@ -3,7 +3,8 @@ package graft.weather
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{KmvTable, Layout, ZIndex, ZTable}
+import graft.operators.{Layout, ZIndex, ZTable}
+import WeatherStats.id8
 import graft.plans.ZoneMapFileIndex
 
 /** The weather SERVE path riding the z-skipping layer: gold — the
@@ -63,91 +64,166 @@ object WeatherZServe {
   graft.plans.ZoneMapScanSwap.registerContract("weather_gold_daily",
     (s, d) => goldDailyZTable(s, d))
 
-  /** Stamp-addressed land dirs already probed-or-written in this JVM
-    * (a memo over the durable `_SUCCESS` probe, not the truth). */
-  private val landed = scala.collection.mutable.Set.empty[String]
   /** Spec observables: gold landings actually WRITTEN in this JVM,
-    * source stamps computed and serve relations built, and the
-    * fresh-JVM simulation hook (it drops the serve memo too, so a
-    * re-resolve after it really goes back to disk). */
+    * source stamps computed and serve relations built. */
   private[graft] val landWrites =
     new java.util.concurrent.atomic.AtomicLong
   private[graft] val stampProbes =
     new java.util.concurrent.atomic.AtomicLong
   private[graft] val servedBuilds =
     new java.util.concurrent.atomic.AtomicLong
-  private[graft] def clearLanded(): Unit = {
-    landed.synchronized { landed.clear() }
-    clearServed()
+
+  // Per-JVM unique bronze landing root: a fixed shared path + Overwrite
+  // would let a concurrent JVM (bench and verify on the same corpus)
+  // delete files a lazy scan in this JVM still references →
+  // FileNotFound / silently short scans. Deleted at JVM exit.
+  private lazy val bronzeRoot: String =
+    WeatherStats.jvmTempRoot("graft_bronze_weather_")
+
+  private def exists(s: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+  private val landLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Gold's full upstream identity: the weather feed plus both dim
-    * sources (stations ← customer, postal ← nation). */
-  private[weather] def sourceStamp(s: SparkSession, d: String): String = {
-    stampProbes.incrementAndGet()
-    Seq("events.parquet", "customer.parquet", "nation.parquet")
-      .map(t => KmvTable.stampOfPath(s, s"$d/$t"))
-      .mkString("\n--\n")
-  }
-
-  /** The stamp-addressed landing path for this corpus. The source
-    * stamp (three file-status probes) is computed by the caller's own
-    * thread, outside [[landed]]'s lock: a serve request computes it
-    * once ([[served]]), and concurrent requests must not queue behind
-    * each other's file-system probes. */
-  private def goldPath(s: SparkSession, d: String): String = {
-    val stamp = sourceStamp(s, d)
-    s"${goldRoot(s)}/${md5hex(d).take(8)}/${md5hex(stamp).take(8)}" +
-      "/gold.parquet"
-  }
-
-  private def committedMarker(s: SparkSession, path: String): Boolean = {
-    val marker = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
-    marker.getFileSystem(s.sparkContext.hadoopConfiguration).exists(marker)
-  }
-
-  /** The committed landing for this corpus stamp, if one already exists
-    * on the durable root — a marker PROBE only, never a build (so
-    * [[WeatherQueries]]' gold builders can serve from it without the
-    * circularity of triggering the landing that computes them). Returns
-    * None on a cold root; the probe costs the three source-stamp
-    * file-status calls plus one FS exists, KB-scale driver metadata. */
-  private[weather] def committedGoldPath(
-      s: SparkSession, d: String): Option[String] = {
-    val path = goldPath(s, d)
-    if (landed.synchronized(landed(path))) Some(path)
-    else if (committedMarker(s, path)) {
-      landed.synchronized { landed += path }
-      Some(path)
-    } else None
-  }
-
-  /** Land the unified gold (observations + forecasts — the reference's
-    * single `weather_data_gold` table) once per (JVM, corpus stamp);
-    * returns the landed parquet path. The write is one pass over the
-    * already-memoized gold frames. The lock covers only the set lookup
-    * and, on a miss, the landing itself. */
-  private def landedGold(s: SparkSession, d: String): String = {
-    val path = goldPath(s, d)
-    landed.synchronized {
-      if (!landed(path)) {
-        // the root is durable: a COMPLETE landing from a prior JVM
-        // (parquet's own `_SUCCESS` commit marker) is reused as-is; a
-        // crash leftover (no marker) is overwritten whole
-        if (!committedMarker(s, path)) {
-          landWrites.incrementAndGet()
-          WeatherQueries.goldUnified(s, d)
-            .write.mode("overwrite").parquet(path)
-        }
-        landed += path
+  /** Land a stamp-addressed parquet `path` once: `write` runs under the
+    * path's own lock, held only across the write, and only while the
+    * parquet `_SUCCESS` commit marker is missing (a crash leftover
+    * without one is overwritten whole). A committed landing — written
+    * by this JVM or, on the durable gold root, a prior one — costs one
+    * marker probe and no lock. A committed path is never re-landed:
+    * re-landing would Overwrite its part files while an
+    * already-analyzed frame still references them. */
+  private def landOnce(s: SparkSession, path: String)(write: => Unit)
+      : String = {
+    if (!exists(s, s"$path/_SUCCESS"))
+      landLocks.computeIfAbsent(path, _ => new Object).synchronized {
+        if (!exists(s, s"$path/_SUCCESS")) write
       }
-    }
     path
   }
+
+  /** One generation of one (session, corpus dir): the gold root and
+    * source stamp it was built for (events + both dim sources, one
+    * entry per table), the stamp-addressed bronze and gold landings
+    * they name, the cached pipeline frames ([[WeatherQueries]] builds
+    * them through [[frame]]) and the serve relations ([[served]]).
+    * [[generation]] replaces a stale entry and unpersists its frames.
+    *
+    * LOCK ORDER. A thread holding one of these locks takes only later
+    * ones, so no cycle can form:
+    *   1. the entry's `serveLock` — building its serve relations;
+    *   2. a ZIndex root lock — the layout builds behind them;
+    *   3. the gold landing's path lock ([[landOnce]]);
+    *   4. the entry's monitor — building one of its frames (builders
+    *      nest: goldObs builds stgObs), or retiring it;
+    *   5. the bronze landing's path lock, or WeatherStats.dims' lock.
+    * Hits take none of them: the generation map, the frames and the
+    * serve relations are read lock-free, and a gold frame finds a
+    * committed landing by a marker probe, not under the landing lock. */
+  private[weather] final class Generation(val s: SparkSession,
+      val d: String, val root: String, val stamps: Seq[String]) {
+
+    // the bronze landing is keyed by the events feed alone — not by
+    // session (every session reads the same files) and not by the dims
+    // (a dims change re-derives gold, not the raw feed). The corpus dir
+    // is sanitized for readability; its md5 keeps /data/x and /data_x
+    // apart
+    private val bronzePath =
+      s"$bronzeRoot/${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${id8(d)}" +
+        s"/${id8(stamps.head)}/events"
+    private val goldPath = s"$root/${id8(d)}/" +
+      s"${id8(stamps.mkString("\n--\n"))}/gold.parquet"
+
+    private val frames =
+      new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    private var retired = false // guarded by this
+
+    /** The frame `key` of this generation, built and cached once. */
+    def frame(key: String)(build: => DataFrame): DataFrame =
+      Option(frames.get(key)).getOrElse(synchronized {
+        Option(frames.get(key)).getOrElse {
+          // a frame built for a retired entry serves its caller uncached
+          val df = if (retired) build else build.cache()
+          frames.put(key, df)
+          df
+        }
+      })
+
+    private[WeatherZServe] def retire(): Unit = synchronized {
+      retired = true
+      frames.values.forEach(_.unpersist(blocking = false))
+    }
+
+    /** The landed bronze events feed: the raw corpus ships ts as INT64
+      * TIMESTAMP(NANOS), whose ns→µs conversion keeps the cleaning
+      * ladder's 168h time filter out of `PushedFilters`. Landing it
+      * once through sources/Bronze (native µs ts + event_date
+      * partitioning — the reference's BRIN-index analogue,
+      * sql/schema.sql:278-292) makes that filter prune at the reader
+      * (WeatherBronzeSpec). Rows are identical to the raw feed. */
+    def landBronze(): String =
+      landOnce(s, bronzePath)(
+        graft.sources.Bronze.landEvents(s, d, bronzePath))
+
+    /** The committed gold landing, if any: one marker probe, no lock. */
+    def committedGold: Option[String] =
+      Some(goldPath).filter(p => exists(s, s"$p/_SUCCESS"))
+
+    /** Land the unified gold (observations + forecasts — the
+      * reference's single `weather_data_gold` table) once per stamp;
+      * returns the landed parquet path. The write is one pass over
+      * this generation's gold frames. */
+    def landGold(): String = landOnce(s, goldPath) {
+      landWrites.incrementAndGet()
+      WeatherQueries.goldUnified(this)
+        .write.mode("overwrite").parquet(goldPath)
+    }
+
+    @volatile private[WeatherZServe] var served: Served = _
+    private[WeatherZServe] val serveLock = new Object
+  }
+
+  /** The corpus tables gold derives from: the weather feed plus both
+    * dim sources (stations ← customer, postal ← nation). */
+  private val GoldSources =
+    Seq("events.parquet", "customer.parquet", "nation.parquet")
+
+  private val generations = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String), Generation]()
+
+  /** The current generation of (session, corpus dir). The source stamp
+    * (three file-status probes) is computed once, on the caller's
+    * thread and outside any lock; a hit takes no lock. A moved stamp or
+    * gold root replaces the entry. */
+  private[weather] def generation(s: SparkSession, d: String): Generation = {
+    stampProbes.incrementAndGet()
+    val stamps = WeatherStats.sourceStamp(s, d, GoldSources)
+    val root = goldRoot(s)
+    def current(g: Generation) =
+      g != null && g.root == root && g.stamps == stamps
+    val hit = generations.get((s, d))
+    if (current(hit)) hit
+    else {
+      var stale: Option[Generation] = None
+      val g = generations.compute((s, d), (_, cur) =>
+        if (current(cur)) cur
+        else { stale = Option(cur); new Generation(s, d, root, stamps) })
+      stale.foreach(_.retire())
+      g
+    }
+  }
+
+  /** Drop every generation, unpersisting its frames and releasing its
+    * serve relations ([[WeatherQueries.clear]]). Landings stay on disk
+    * and stay valid: the next generation finds them committed. */
+  private[weather] def clearGenerations(): Unit =
+    generations.forEach((k, g) => if (generations.remove(k, g)) g.retire())
+
+  private def landedGold(s: SparkSession, d: String): String =
+    generation(s, d).landGold()
 
   /** Gold's layout contract, ONE LAYOUT PER data_type (the
     * reference's gold is one table with a discriminator; splitting the
@@ -170,7 +246,7 @@ object WeatherZServe {
     // face) must follow a regenerated corpus to its fresh
     // stamp-addressed landing instead of pinning the path captured at
     // registration. Serve requests do not pay it per call: they reuse
-    // [[served]]'s relations, built through here once per landing.
+    // [[served]]'s relations, built through here once per generation.
     ZTable(s"weather_gold_${which.take(3)}",
       _ => landedGold(s, d),
       (s2, _) => s2.read.parquet(landedGold(s2, d)),
@@ -187,7 +263,7 @@ object WeatherZServe {
       // resolve into — and rebuild across — the other suite's temp
       // root); stable per (corpus dir, data_type) within the JVM
       rootOverride = Some(
-        s"${goldRoot(s)}/${md5hex(d).take(8)}/z_${which.take(3)}"))
+        s"${goldRoot(s)}/${id8(d)}/z_${which.take(3)}"))
   }
 
   /** The UNIFIED gold layout — the reference's single
@@ -216,7 +292,7 @@ object WeatherZServe {
         half(df, "observation", "timestamp", math.max(1, n / 2))
           .unionByName(half(df, "forecast", "forecast_timestamp",
             math.max(1, n - n / 2)))),
-      rootOverride = Some(s"${goldRoot(s)}/${md5hex(d).take(8)}/z_all"))
+      rootOverride = Some(s"${goldRoot(s)}/${id8(d)}/z_all"))
   }
 
   /** The DAILY-ROLLUP layout (r15 verdict #3's consumer): unified gold
@@ -238,7 +314,7 @@ object WeatherZServe {
         graft.operators.Layout.partitionPureBy(
           df, Seq("data_type", "day"))),
       prep = Some(df => df.withColumn("day", to_date(col("timestamp")))),
-      rootOverride = Some(s"${goldRoot(s)}/${md5hex(d).take(8)}/z_daily"))
+      rootOverride = Some(s"${goldRoot(s)}/${id8(d)}/z_daily"))
 
   /** q187 — the MULTI-KEY grouped metadata serve (r15 verdict #3): the
     * daily layer report — `GROUP BY data_type, day` — over the
@@ -335,35 +411,21 @@ object WeatherZServe {
       root: String, gen: Long, latest: Option[Long]) {
     /** The probe [[ZIndex.ensure]] keeps for an externally wiped
       * layout: the generation's `_COMMITTED` marker still exists. */
-    def committed(s: SparkSession): Boolean = {
-      val m = new org.apache.hadoop.fs.Path(s"$root/gen-$gen/_COMMITTED")
-      m.getFileSystem(s.sparkContext.hadoopConfiguration).exists(m)
-    }
+    def committed(s: SparkSession): Boolean =
+      exists(s, s"$root/gen-$gen/_COMMITTED")
   }
 
-  /** The serve relations of one (session, corpus) for one gold landing.
-    * `gold` is the TYPE-PURE union: each branch filters to the data_type
-    * its layout's `prep` already guarantees, so the answers cannot
-    * change, and Catalyst's optimizer drops the branch a data_type
-    * predicate contradicts — a history or horizon request plans one
-    * scan, over its own type's layout. */
-  private final case class Served(landing: String, obs: Held, fc: Held) {
+  /** The serve relations of one generation. `gold` is the TYPE-PURE
+    * union: each branch filters to the data_type its layout's `prep`
+    * already guarantees, so the answers cannot change, and Catalyst's
+    * optimizer drops the branch a data_type predicate contradicts — a
+    * history or horizon request plans one scan, over its own type's
+    * layout. */
+  private final case class Served(obs: Held, fc: Held) {
     val gold: DataFrame =
       obs.df.filter(col("data_type") === "observation")
         .unionByName(fc.df.filter(col("data_type") === "forecast"))
   }
-
-  /** (session, corpus dir) → the serve relations of the landing they
-    * were built over. A hit costs one source stamp and two marker
-    * probes; a changed stamp or a missing marker rebuilds through the
-    * ordinary [[ZIndex.zFrame]] / [[ZIndex.ensure]] path, once, under
-    * the key's lock. */
-  private val servedMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Served]()
-  private val servedLocks = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Object]()
-
-  private[graft] def clearServed(): Unit = servedMemo.clear()
 
   private def held(s: SparkSession, d: String, which: String,
       tsCol: String): Held = {
@@ -374,33 +436,32 @@ object WeatherZServe {
     Held(df, idx, root, gen, zoneMax(idx.currentEntries, tsCol))
   }
 
+  /** The current generation's serve relations. A hit costs the source
+    * stamp and the two `_COMMITTED` probes; a new generation or a
+    * missing marker rebuilds through the ordinary [[ZIndex.zFrame]] /
+    * [[ZIndex.ensure]] path, once, under the generation's serve lock. */
   private def served(s: SparkSession, d: String): Served = {
-    val landing = goldPath(s, d)
-    val key = (s, d)
-    def fresh(e: Served): Boolean = e != null && e.landing == landing &&
-      e.obs.committed(s) && e.fc.committed(s)
-    val hit = servedMemo.get(key)
+    val g = generation(s, d)
+    def fresh(e: Served): Boolean =
+      e != null && e.obs.committed(s) && e.fc.committed(s)
+    val hit = g.served
     if (fresh(hit)) hit
-    else servedLocks.computeIfAbsent(key, _ => new Object).synchronized {
-      val again = servedMemo.get(key)
-      if (fresh(again)) again // built while this thread waited
-      else {
+    else g.serveLock.synchronized {
+      if (!fresh(g.served)) { // else built while this thread waited
         servedBuilds.incrementAndGet()
-        val e = Served(landing,
-          held(s, d, "observation", "timestamp"),
+        g.served = Served(held(s, d, "observation", "timestamp"),
           held(s, d, "forecast", "forecast_timestamp"))
-        servedMemo.put(key, e)
-        e
       }
+      g.served
     }
   }
 
   /** The serve relation: unified gold (obs ∪ fc layouts) behind
-    * zone-mapped FileIndexes, reused across requests while the landing
-    * and both generations stand ([[served]]). Every predicate the serve
-    * queries push — postal equality/prefix, time-window range — gets
-    * per-file refutation from the planner; a data_type-specific query
-    * never plans the OTHER type's layout. */
+    * zone-mapped FileIndexes, reused across requests while the corpus
+    * generation and both layout generations stand ([[served]]). Every
+    * predicate the serve queries push — postal equality/prefix,
+    * time-window range — gets per-file refutation from the planner; a
+    * data_type-specific query never plans the OTHER type's layout. */
   private[graft] def zGoldWithIndexes(s: SparkSession, d: String)
       : (DataFrame, Seq[ZoneMapFileIndex]) = {
     val e = served(s, d)
@@ -471,7 +532,7 @@ object WeatherZServe {
     * relations read, obs then fc — None before the first request. */
   private[graft] def servedGenerations(s: SparkSession, d: String)
       : Option[((String, Long), (String, Long))] =
-    Option(servedMemo.get((s, d))).map(e =>
+    Option(generations.get((s, d))).flatMap(g => Option(g.served)).map(e =>
       ((e.obs.root, e.obs.gen), (e.fc.root, e.fc.gen)))
 
   /** q179 — the DERIVED table's stats heartbeat, metadata-served: the

@@ -1,18 +1,18 @@
 package graft
 
 import graft.operators.ZIndex
-import graft.weather.WeatherZServe
+import graft.weather.{WeatherQueries, WeatherZServe}
 
 /** r16 #4 — the weather gold landing + layouts live under a DURABLE
   * conf-rooted location, not a per-JVM temp dir. Pins:
   * (1) the resolved layout root is the stable shared root (nothing
   *     named like a per-JVM temp dir);
-  * (2) a "fresh JVM" (every in-memory memo dropped: the landing set,
-  *     the ZIndex stamp memo, the scan-swap registry) re-resolves the
-  *     SAME committed generation from disk — no gold re-land
-  *     (landWrites unchanged) and no recluster (same (root, gen)) —
-  *     and the heartbeat still serves; the serve relations are rebuilt
-  *     from disk too, over the same generations. */
+  * (2) a "fresh JVM" (every in-memory memo dropped: the weather
+  *     generations, the ZIndex stamp memo, the scan-swap registry)
+  *     re-resolves the SAME committed generation from disk — no gold
+  *     re-land (landWrites unchanged) and no recluster (same
+  *     (root, gen)) — and the heartbeat still serves; the serve
+  *     relations are rebuilt from disk too, over the same generations. */
 class WeatherGoldDurableSpec extends SparkSpec {
 
   test("a fresh JVM re-arms the gold serve from the durable root: " +
@@ -29,7 +29,7 @@ class WeatherGoldDurableSpec extends SparkSpec {
       s"the root must be the durable shared location, got $r1")
     // fresh-JVM simulation: drop every in-memory memo the resolution
     // could ride; only the durable on-disk state remains
-    WeatherZServe.clearLanded()
+    WeatherQueries.clear()
     ZIndex.clearMemo()
     graft.plans.ZoneMapScanSwap.clear()
     val w0 = WeatherZServe.landWrites.get()
