@@ -97,10 +97,11 @@ object Bench {
     // decimal layout, LSH signature index, fingerprint index, sign-LSH
     // embedding index) are INDEPENDENT artifacts over disjoint roots,
     // and each cold build is job-submission-bound at this scale — so
-    // the selected ones fan out under ONE pinned conf window
-    // (optimization r16, guide §2.6): prewarm_zindex becomes the WALL
-    // of the parallel window (serial it was the sum, 13.4 s cold on
-    // this corpus), and each build still stamps its own stderr key.
+    // the selected ones fan out, one thread each (optimization r16,
+    // guide §2.6; each build pins its own write conf): prewarm_zindex
+    // becomes the WALL of the parallel window (serial it was the sum,
+    // 13.4 s cold on this corpus), and each build still stamps its own
+    // stderr key.
     var prewarmZ = 0.0
     locally {
       val family: Seq[(String, Seq[String],
@@ -125,22 +126,20 @@ object Bench {
         .filter(_._2.exists(selected))
       if (family.nonEmpty) {
         val tw = System.nanoTime()
-        graft.operators.ZIndex.withPinnedWriteConf(spark) {
-          val errs =
-            new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-          val threads = family.map { case (key, _, tbl) =>
-            val th = new Thread(() => try {
-              val t0 = System.nanoTime()
-              graft.operators.ZIndex.ensure(spark, sfDir, tbl())
-              System.err.println(
-                s"[bench] $key ${fmt((System.nanoTime() - t0) / 1e9)}")
-            } catch { case e: Throwable => errs.add(e) },
-              s"prewarm-$key")
-            th.setDaemon(true); th.start(); th
-          }
-          threads.foreach(_.join())
-          if (!errs.isEmpty) throw errs.peek()
+        val errs =
+          new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+        val threads = family.map { case (key, _, tbl) =>
+          val th = new Thread(() => try {
+            val t0 = System.nanoTime()
+            graft.operators.ZIndex.ensure(spark, sfDir, tbl())
+            System.err.println(
+              s"[bench] $key ${fmt((System.nanoTime() - t0) / 1e9)}")
+          } catch { case e: Throwable => errs.add(e) },
+            s"prewarm-$key")
+          th.setDaemon(true); th.start(); th
         }
+        threads.foreach(_.join())
+        if (!errs.isEmpty) throw errs.peek()
         prewarmZ = (System.nanoTime() - tw) / 1e9
         System.err.println(s"[bench] prewarm_zindex_window ${fmt(prewarmZ)}")
       }

@@ -927,10 +927,13 @@ object Layout {
   // COUNT(DISTINCT …) into the KMV sketch estimate — the
   // conf-switchable accuracy-for-cost trade of BigQuery/Snowflake/
   // Trino's APPROX_COUNT_DISTINCT, without touching the query text.
-  // The approximate run is materialized INSIDE the conf window (5
-  // grouped rows — watermark-scalar precedent) because the rule reads
-  // the conf at optimization time. The oracle reproduces the rewrite's
-  // math: round((k−1)/u_k) above saturation, the exact count below.
+  // The approximate run sets the flag in its own clone of the session
+  // ([[org.apache.spark.sql.graft.PinnedConf]]), never on the caller's,
+  // so a concurrent exact COUNT(DISTINCT) stays exact; it is
+  // materialized there (5 grouped rows — watermark-scalar precedent)
+  // because the rule reads the conf at optimization time. The oracle
+  // reproduces the rewrite's math: round((k−1)/u_k) above saturation,
+  // the exact count below.
   // ------------------------------------------------------------------
   def q152ApproxRewrite(spark: SparkSession, dir: String): DataFrame = {
     // sessions built without GraftExtensions (Verify/Bench mains) get the
@@ -943,26 +946,15 @@ object Layout {
       .createOrReplaceTempView("graft_q152_events")
     val sql = """SELECT event_type, count(DISTINCT user_id) AS n
                  FROM graft_q152_events GROUP BY event_type"""
-    if (!anchorsOn(spark)) {
-      // production shape: the approx mode ALONE — the exact
-      // COUNT(DISTINCT) run exists only as the gate's anchor.
-      // Materialized INSIDE the conf window (the rule reads the conf at
-      // optimization time, i.e. at the action), same as the anchored
-      // branch; grouped-rows scale.
-      spark.conf.set("spark.graft.approx.countDistinct", "true")
-      val rows = try spark.sql(sql).collect().toSeq
-        finally spark.conf.unset("spark.graft.approx.countDistinct")
-      import spark.implicits._
-      return rows.map(r => (r.getString(0), r.getLong(1)))
-        .toDF("event_type", "n_approx").orderBy(col("event_type"))
-    }
-    val exact = spark.sql(sql).withColumnRenamed("n", "n_exact")
-    spark.conf.set("spark.graft.approx.countDistinct", "true")
-    val approxRows = try spark.sql(sql).collect().toSeq
-      finally spark.conf.unset("spark.graft.approx.countDistinct")
     import spark.implicits._
-    val approx = approxRows.map(r => (r.getString(0), r.getLong(1)))
+    val approx = org.apache.spark.sql.graft.PinnedConf(spark.sql(sql),
+        "spark.graft.approx.countDistinct" -> "true")
+      .collect().toSeq.map(r => (r.getString(0), r.getLong(1)))
       .toDF("event_type", "n_approx")
+    // production shape: the approx mode ALONE — the exact
+    // COUNT(DISTINCT) run exists only as the gate's anchor
+    if (!anchorsOn(spark)) return approx.orderBy(col("event_type"))
+    val exact = spark.sql(sql).withColumnRenamed("n", "n_exact")
     exact.join(approx, "event_type")
       .select(col("event_type"), col("n_exact"), col("n_approx"),
         ((col("n_approx").cast("double") - col("n_exact").cast("double"))

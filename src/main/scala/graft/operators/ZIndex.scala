@@ -89,6 +89,13 @@ case class ZTable(name: String,
   * `OPTIMIZE ZORDER` — amortized O(corpus / maxGenerations) per
   * append, and soundness never depended on it).
   *
+  * Concurrency: the only lock is the per-root one [[ensure]] holds. A
+  * layout write pins its parquet timestamp type in its own clone of the
+  * session ([[org.apache.spark.sql.graft.PinnedConf]]) and never writes
+  * the caller's session, so concurrent builds of different roots — and
+  * [[ensureAll]]'s fan-out, which holds nothing while it joins — cannot
+  * wait on each other.
+  *
   * At 100 TB: the zone map stays KB-per-thousand-files and lives on
   * the driver for exactly one filter pass; the pruned read opens only
   * the matching files — no listing, no footer reads, no tasks for the
@@ -200,75 +207,61 @@ object ZIndex {
     case DecKind(p, s) => DecimalType(p.toInt, s.toInt)
   }
 
-  /** The outputTimestampType set/restore window below is SESSION-wide:
-    * serialize it across ALL roots (r14 ADVICE — two concurrent
-    * ensure() calls on different roots could interleave set/unset and
-    * write one layout as INT96 or leave the session conf altered). */
-  private val writeConfLock = new Object
-
-  /** True on threads running inside a [[withPinnedWriteConf]] window
-    * (inherited by threads SPAWNED inside the window — the parallel
-    * [[ensureAll]] builders): the session conf is already pinned to
-    * TIMESTAMP_MICROS and held so by the window owner, so the
-    * per-build set/restore (and its serializing lock) must be
-    * skipped. Inheritable-thread-local, not a global flag: a build on
-    * an unrelated thread while someone else's window is open must NOT
-    * skip its own set/restore — the window could close (restoring the
-    * conf) before that build's write job captures the conf. */
-  private val confPinned: InheritableThreadLocal[java.lang.Boolean] =
-    new InheritableThreadLocal[java.lang.Boolean] {
-      override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
-    }
-
-  /** Hold the layout-write conf window open across `body`: acquires
-    * the session-wide lock ONCE, pins outputTimestampType, and lets
-    * every layout write inside (including ones on threads spawned by
-    * `body`) run without its own set/restore — the mechanism that
-    * makes INDEPENDENT layout builds overlap instead of serializing
-    * on the conf window (optimization guide §2.6: the cold prewarm
-    * window then costs max(builds), not sum). */
-  def withPinnedWriteConf[A](spark: SparkSession)(body: => A): A =
-    writeConfLock.synchronized {
-      val tsKey = "spark.sql.parquet.outputTimestampType"
-      val tsPrior = spark.conf.getOption(tsKey)
-      spark.conf.set(tsKey, "TIMESTAMP_MICROS")
-      confPinned.set(java.lang.Boolean.TRUE)
-      try body
-      finally {
-        confPinned.set(java.lang.Boolean.FALSE)
-        tsPrior match {
-          case Some(v) => spark.conf.set(tsKey, v)
-          case None => spark.conf.unset(tsKey)
-        }
-      }
-    }
-
-  /** Ensure several INDEPENDENT layouts concurrently under one pinned
-    * conf window — one thread per table (they are few and the builds
-    * are job-submission-bound in local mode; distinct roots never
-    * contend beyond the storage layer, same-root calls serialize on
-    * the per-root ensure lock exactly as before). Returns the
-    * per-table (root, generation) in input order; the first build
-    * failure rethrows after all threads settle. */
+  /** Ensure several INDEPENDENT layouts concurrently — one thread per
+    * table (they are few and the builds are job-submission-bound in
+    * local mode, so the fan-out costs max(builds), not their sum).
+    * Holds no lock while it joins: each build pins its own write conf
+    * ([[clusterAndMap]]) and same-root calls serialize on the per-root
+    * ensure lock only. Returns the per-table (root, generation) in
+    * input order; the first build failure rethrows after all threads
+    * settle. */
   def ensureAll(spark: SparkSession, dir: String,
       tables: Seq[ZTable]): Seq[(String, Long)] =
-    withPinnedWriteConf(spark) {
-      if (tables.sizeIs <= 1) tables.map(ensure(spark, dir, _))
-      else {
-        val out = new Array[(String, Long)](tables.size)
-        val errs =
-          new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-        val threads = tables.zipWithIndex.map { case (t, i) =>
-          val th = new Thread(() =>
-            try out(i) = ensure(spark, dir, t)
-            catch { case e: Throwable => errs.add(e) },
-            s"zindex-ensure-$i")
-          th.setDaemon(true); th.start(); th
-        }
-        threads.foreach(_.join())
-        if (!errs.isEmpty) throw errs.peek()
-        out.toSeq
+    if (tables.sizeIs <= 1) tables.map(ensure(spark, dir, _))
+    else {
+      val out = new Array[(String, Long)](tables.size)
+      val errs =
+        new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val threads = tables.zipWithIndex.map { case (t, i) =>
+        val th = new Thread(() =>
+          try out(i) = ensure(spark, dir, t)
+          catch { case e: Throwable => errs.add(e) },
+          s"zindex-ensure-$i")
+        th.setDaemon(true); th.start(); th
       }
+      threads.foreach(_.join())
+      if (!errs.isEmpty) throw errs.peek()
+      out.toSeq
+    }
+
+  /** Range-cluster with the producing plan evaluated ONCE: range
+    * partitioning samples its input before shuffling it, so an
+    * expensive producer (index signing) would run twice — persist the
+    * rows as serialized DISK_ONLY blocks (deserialized heap caching
+    * OOM'd an 8 GB heap at the 2M-vector replica) and let the sampling
+    * pass materialize them. [[clusterAndMap]] releases the blocks
+    * right after the layout write — deterministic, no harness sweep
+    * needed, and safe because a persist (unlike a localCheckpoint)
+    * keeps its lineage. The layout-build helper behind the index
+    * tables' `clusterWith`. */
+  private[graft] def rangeClusterOnce(df: DataFrame, n: Int,
+      cols: Column*): DataFrame = {
+    val once = df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    buildCaches.get().add(once)
+    once.repartitionByRange(n, cols: _*).sortWithinPartitions(cols: _*)
+  }
+
+  /** DISK_ONLY producers minted by [[rangeClusterOnce]], released by
+    * [[clusterAndMap]] after the write they fed. PER-THREAD: the
+    * producing clusterWith lambda runs on the build thread inside
+    * [[clusterAndMap]], so registration and release share a thread — and a
+    * CONCURRENT build (ensureAll) can no longer release a sibling's
+    * producer mid-write, which would silently re-run the expensive
+    * producer (signing) from lineage. */
+  private val buildCaches =
+    new ThreadLocal[java.util.ArrayDeque[DataFrame]] {
+      override def initialValue(): java.util.ArrayDeque[DataFrame] =
+        new java.util.ArrayDeque[DataFrame]()
     }
 
   /** Cluster `rows` into `n` z-sorted files under `genDir/files` and
@@ -284,43 +277,17 @@ object ZIndex {
     * file yields (NULL, NULL, nulls=rows): the file cannot satisfy a
     * predicate on it. A known-bounds file whose null COUNT the footer
     * did not carry records nulls = -1 (bounds prune, IsNull cannot). */
-  /** Range-cluster with the producing plan evaluated ONCE: range
-    * partitioning samples its input before shuffling it, so an
-    * expensive producer (index signing) would run twice — persist the
-    * rows as serialized DISK_ONLY blocks (deserialized heap caching
-    * OOM'd an 8 GB heap at the 2M-vector replica) and let the sampling
-    * pass materialize them. [[clusterAndMap]] releases the blocks
-    * right after the layout write — deterministic, no harness sweep
-    * needed, and safe because a persist (unlike a localCheckpoint)
-    * keeps its lineage. The layout-build helper behind the index
-    * tables' `clusterWith`. */
-  private[operators] def rangeClusterOnce(df: DataFrame, n: Int,
-      cols: Column*): DataFrame = {
-    val once = df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    buildCaches.get().add(once)
-    once.repartitionByRange(n, cols: _*).sortWithinPartitions(cols: _*)
-  }
-
-  /** DISK_ONLY producers minted by [[rangeClusterOnce]], released by
-    * [[clusterAndMap]] after the write they fed. PER-THREAD: the
-    * producing clusterWith lambda runs inside the build thread's own
-    * writeFiles(), so registration and release share a thread — and a
-    * CONCURRENT build (ensureAll) can no longer release a sibling's
-    * producer mid-write, which would silently re-run the expensive
-    * producer (signing) from lineage. */
-  private val buildCaches =
-    new ThreadLocal[java.util.ArrayDeque[DataFrame]] {
-      override def initialValue(): java.util.ArrayDeque[DataFrame] =
-        new java.util.ArrayDeque[DataFrame]()
-    }
-
   private def clusterAndMap(spark: SparkSession, rows: DataFrame,
       genName: String, genDir: String, n: Int, t: ZTable): DataFrame = {
     // layout files are written as TIMESTAMP_MICROS, never INT96:
     // INT96 footers carry no min/max, so timestamp zones would be
-    // keep-all and time-window serve predicates couldn't skip
-    def writeFiles(): Unit = t.clusterWith.map(f => f(rows, n))
-      .getOrElse(Layout.clusterByZ(rows, t.xCol, t.yCol, n))
+    // keep-all and time-window serve predicates couldn't skip. Spark
+    // reads that conf only from the session (a writer option is
+    // ignored), so the write runs in a clone of the session with it set
+    org.apache.spark.sql.graft.PinnedConf(
+        t.clusterWith.map(f => f(rows, n))
+          .getOrElse(Layout.clusterByZ(rows, t.xCol, t.yCol, n)),
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
       .write.mode("overwrite")
       // pin statistics to FULL length (r14 ADVICE): a deployment-level
       // parquet.statistics.truncate.length would truncate binary maxima
@@ -329,17 +296,6 @@ object ZIndex {
       .option("parquet.statistics.truncate.length",
         Integer.MAX_VALUE.toString)
       .parquet(s"$genDir/files")
-    if (confPinned.get()) writeFiles() // enclosing window owns the conf
-    else writeConfLock.synchronized {
-      val tsKey = "spark.sql.parquet.outputTimestampType"
-      val tsPrior = spark.conf.getOption(tsKey)
-      spark.conf.set(tsKey, "TIMESTAMP_MICROS")
-      try writeFiles()
-      finally tsPrior match {
-        case Some(v) => spark.conf.set(tsKey, v)
-        case None => spark.conf.unset(tsKey)
-      }
-    }
     // release the rangeClusterOnce producers THIS build's write just
     // consumed (thread-local — see buildCaches)
     locally {

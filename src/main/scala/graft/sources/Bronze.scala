@@ -110,15 +110,8 @@ object Bronze {
         tagged.withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn", "__src")
     }
-    val saved = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    try {
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      toWrite.write.mode(SaveMode.Overwrite).partitionBy("event_date").parquet(path)
-    } finally {
-      saved match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+    try overwriteDays(toWrite, path)
+    finally {
       // the checkpointed existing-slice's only consumer is the write just
       // completed — release its blocks now instead of leaking them for the
       // session's life (one leak per 6h batch adds up in a long service)
@@ -156,10 +149,8 @@ object Bronze {
       val kept = touched.join(optOut, Seq("user_id"), "left_anti")
         .localCheckpoint() // materialize before overwriting what we read
       val removed = touched.count() - kept.count()
-      val saved = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
       try {
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        kept.write.mode(SaveMode.Overwrite).partitionBy("event_date").parquet(path)
+        overwriteDays(kept, path)
         // dynamic overwrite only replaces partitions PRESENT in the written
         // data — a day whose rows were ALL opted out produces no output and
         // would silently keep its stale files. Drop those directories
@@ -174,16 +165,21 @@ object Bronze {
           fs.delete(new org.apache.hadoop.fs.Path(s"$path/event_date=$d"), true)
         }
       } finally {
-        saved match {
-          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
         graft.util.Checkpoints.release(kept)
         graft.util.Checkpoints.release(affectedDays)
       }
       removed
     }
   }
+
+  /** Rewrite only the `event_date` partitions present in `df`. The
+    * dynamic mode rides on the writer, not the session: a concurrent
+    * static `Overwrite` + `partitionBy` on the same session (e.g.
+    * [[landEvents]]) keeps its own mode. */
+  private def overwriteDays(df: DataFrame, path: String): Unit =
+    df.write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("event_date").parquet(path)
 
   def events(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)

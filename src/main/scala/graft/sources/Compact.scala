@@ -14,8 +14,10 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
   *
   *  - `repartition(n)` (round-robin shuffle), not `coalesce` — coalesce
   *    merges unevenly and can leave one executor writing most of the data;
-  *  - staged write + Hadoop-FS swap, same crash-safe pattern as
-  *    [[Upsert.mergeIntoParquet]];
+  *  - staged write + rename-aside Hadoop-FS swap: the old copy stays
+  *    at `.old` until the new one is in place (recovery by hand — unlike
+  *    [[Upsert.mergeIntoParquet]], whose next call rolls a complete
+  *    staged copy forward);
   *  - date-partitioned tables compact per partition directory (call this
   *    on each day's path) so only hot partitions are rewritten.
   */

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental gold refresh — the TRANSFORM-side completion of the
@@ -37,14 +37,14 @@ object IncrementalGold {
   // one task per day (hash on the partition key) + a deterministic sort,
   // so a day's file bytes are a pure function of that day's rows — the
   // property that makes refreshed-vs-rebuilt partitions comparable
-  private def write(df: DataFrame, goldPath: String): Unit =
+  private def writer(df: DataFrame): DataFrameWriter[Row] =
     df.repartition(col("event_date"))
       .sortWithinPartitions(col("event_date"), col("event_type"))
-      .write.mode(SaveMode.Overwrite).partitionBy("event_date").parquet(goldPath)
+      .write.mode(SaveMode.Overwrite).partitionBy("event_date")
 
   /** Full rebuild (bootstrap / backfill): static overwrite of the table. */
   def rebuild(spark: SparkSession, bronzePath: String, goldPath: String): Unit =
-    write(dailyAgg(Bronze.events(spark, bronzePath)), goldPath)
+    writer(dailyAgg(Bronze.events(spark, bronzePath))).parquet(goldPath)
 
   /** Refresh ONLY `days`: the bronze read prunes to those day directories
     * (partition filter on `event_date`) and the write overwrites only the
@@ -54,14 +54,9 @@ object IncrementalGold {
       days: Seq[java.sql.Date]): Unit = {
     val slice = Bronze.events(spark, bronzePath)
       .filter(col("event_date").isInCollection(days))
-    val saved = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    try {
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      write(dailyAgg(slice), goldPath)
-    } finally saved match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    // dynamic mode as a writer option, never on the caller's session
+    writer(dailyAgg(slice)).option("partitionOverwriteMode", "dynamic")
+      .parquet(goldPath)
   }
 
   /** The days a raw batch touches — what an ingest pipeline passes from

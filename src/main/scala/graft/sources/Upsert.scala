@@ -71,6 +71,12 @@ object Upsert {
     * object store (never `java.io.File`, which silently no-ops off the
     * local machine). Note the swap is atomic only where `rename` is
     * (HDFS/local); on S3-like stores pair with a manifest/table format.
+    *
+    * Crash-safe: the swap deletes the target before renaming the staged
+    * copy in, so a crash between the two leaves no target but a complete
+    * `.staging` (its `_SUCCESS` marker written). The next call rolls that
+    * copy forward into place before it reads, instead of merging into
+    * nothing and overwriting the only full copy of the table.
     */
   def mergeIntoParquet(df: DataFrame, path: String,
       keys: Seq[String], versionCol: String, mode: Mode,
@@ -79,14 +85,18 @@ object Upsert {
     val hconf = spark.sessionState.newHadoopConf()
     val target = new org.apache.hadoop.fs.Path(path)
     val fs = target.getFileSystem(hconf)
+    val staging = new org.apache.hadoop.fs.Path(path + ".staging")
+    def swapIn(): Unit =
+      if (!fs.rename(staging, target))
+        throw new java.io.IOException(s"rename $staging -> $target failed")
+    if (!fs.exists(target) &&
+        fs.exists(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"))) swapIn()
     val existing = if (fs.exists(target)) Some(spark.read.parquet(path)) else None
     val merged = merge(existing, df, keys, versionCol, mode)
-    val staging = new org.apache.hadoop.fs.Path(path + ".staging")
     val writer = merged.write.mode(SaveMode.Overwrite)
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
       .parquet(staging.toString)
     if (fs.exists(target)) fs.delete(target, true)
-    if (!fs.rename(staging, target))
-      throw new java.io.IOException(s"rename $staging -> $target failed")
+    swapIn()
   }
 }

@@ -576,8 +576,8 @@ object WeatherZServe {
     landedGold(s, d)
     stamp("land_gold")
     // the four layouts are independent builds over the one landed gold
-    // parquet — fan them under one pinned conf window (guide §2.6;
-    // serial they cost ~1.5 s each, the window then costs their max)
+    // parquet — fan them out, one thread each (guide §2.6; serial they
+    // cost ~1.5 s each, the fan-out then costs their max)
     ZIndex.ensureAll(s, d, Seq(
       goldZTable(s, d, "observation"), goldZTable(s, d, "forecast"),
       goldAllZTable(s, d), goldDailyZTable(s, d)))

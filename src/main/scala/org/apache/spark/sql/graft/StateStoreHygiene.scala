@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graft
 
-/** The one place this library reaches into Spark's `private[sql]` surface:
+/** This package is where the library reaches into Spark's `private[sql]`
+  * surface (see also [[PinnedConf]]). Here:
   * `StateStore.unloadAll()` drops every registered streaming state-store
   * provider (state maps on heap + maintenance polling). Spark only does
   * this at SparkContext stop; a long-lived session that runs many

@@ -61,4 +61,24 @@ class UpsertSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getInt(1), r.getDouble(2)))
     assert(out.toSeq === Seq(("a", 2, 77.0), ("b", 1, 5.0)))
   }
+
+  test("a crash between the swap's delete and rename loses no rows: " +
+      "the next merge rolls the staged table forward first") {
+    val path = tmp()
+    Upsert.mergeIntoParquet(Seq(("a", 1, 10.0), ("b", 1, 20.0)).toDF("k", "version", "v"),
+      path, Seq("k"), "version", Mode.LastWins)
+    // the state a crash mid-swap leaves: the next merge's staged copy is
+    // complete (parquet wrote its _SUCCESS), the target is already deleted
+    Seq(("a", 2, 11.0), ("b", 1, 20.0)).toDF("k", "version", "v")
+      .write.parquet(path + ".staging")
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    Upsert.mergeIntoParquet(Seq(("c", 1, 30.0)).toDF("k", "version", "v"),
+      path, Seq("k"), "version", Mode.LastWins)
+    val out = spark.read.parquet(path).orderBy("k")
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getDouble(2)))
+    assert(out.toSeq === Seq(("a", 2, 11.0), ("b", 1, 20.0), ("c", 1, 30.0)))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(path + ".staging")))
+  }
 }
