@@ -9,9 +9,9 @@ import graft.sources.Tables
   * gate, completing the set q184/q189 built for MinHash: q86's scaladoc
   * claimed "at 100 TB the corpus side is the persisted fingerprint
   * INDEX" — this makes that index real (one md5 per standing doc,
-  * fp-range-clustered under the [[ZIndex]] generation contract:
-  * consumed-file identity, `_COMMITTED`, O(delta) appends, mutation →
-  * rebuild) and runs the reference's ON-CONFLICT-DO-NOTHING admission
+  * fp-range-clustered as a [[ZIndex]] layout committed through
+  * [[graft.util.Generations]]: O(delta) appends, mutation → rebuild)
+  * and runs the reference's ON-CONFLICT-DO-NOTHING admission
   * (`sql/schema.sql` DO NOTHING upserts / S6) as a CONTINUOUS gate:
   * a stream of incoming documents fingerprints per row (stateless md5
   * — Append mode, no watermark, no state at all) and anti-joins

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.sources.Tables
+import graft.util.Generations
 
 /** Durable, INCREMENTALLY-maintained daily sketch table — the profiler
   * shape the q139/q146/q148/q161 family's 100 TB posture keeps
@@ -42,11 +43,9 @@ import graft.sources.Tables
   *     maintenance falls back to a full rebuild (the IVF corpus-stamp
   *     rule, `VectorOps.corpusStamp`, applied per-file so appends stay
   *     incremental).
-  *   - every maintenance writes a NEW generation dir (`gen-<n>/`), then
-  *     commits it by creating `_COMMITTED` — a single atomic create.
-  *     Readers resolve the highest committed generation, so a crash
-  *     mid-write leaves an ignored partial dir and the PRIOR generation
-  *     intact.
+  *   - every maintenance writes and commits a NEW generation through
+  *     [[graft.util.Generations]] (atomic commit marker, crash-leftover
+  *     sweep, consumed-identity diff).
   *   - MANIFEST generations (r10 verdict #2): a generation holds ONLY
   *     the partitions its maintenance actually rewrote, plus a
   *     `manifest` mapping every live (event_type, d) partition to the
@@ -69,16 +68,14 @@ import graft.sources.Tables
   *     when neither the latest committed manifest nor the prior
   *     committed one references it (the prior manifest keeps in-flight
   *     lazy readers of the previous table alive — the one-prior
-  *     retention rule, refcount form). Uncommitted leftovers of crashed
-  *     runs are swept before the next write.
+  *     retention rule, refcount form).
   *   - re-running after a crash re-merges the same files — KMV /
   *     bottom-k union-resketch is IDEMPOTENT (re-adding hashes already
   *     in a kept set changes nothing), so at-least-once maintenance is
   *     exactly-once in effect. No transaction log.
-  *   - consumed-file membership is decided by ANTI-JOIN between the
-  *     current listing and the consumed parquet — the consumed history
-  *     is never collected to the driver; only the (append-scale) delta
-  *     of new file names is.
+  *   - consumed-file membership is a driver-side set diff of the feed
+  *     listing against `consumed`: the listing is on the driver anyway,
+  *     and `consumed` holds the same identities, one line per file.
   *   - a PRE-MANIFEST layout (r10's per-generation full copies, or the
   *     r9 flat `sketches/`+`consumed/` root) is detected by the missing
   *     manifest and migrated by one full rebuild; the stale dirs are
@@ -106,8 +103,9 @@ object KmvTable {
     * draws, see the schema comment); format-5 added `nuv`, the
     * user∧value non-null population (r12 ADVICE — the exact
     * null-complement for a key-framed value column, so injected value
-    * nullCounts stop being a bound). */
-  private[graft] val FormatMarker = "format-5"
+    * nullCounts stop being a bound); format-6 records `consumed` as
+    * identity lines ([[graft.util.Generations]]) instead of parquet. */
+  private[graft] val FormatMarker = "format-6"
 
   /** Part files scanned by maintenance in this JVM (spec observable). */
   private[graft] val filesScanned = new AtomicLong
@@ -182,68 +180,9 @@ object KmvTable {
       sys.props("java.io.tmpdir") + s"/graft_kmv_table/$id"
     }
 
-  private[graft] case class PartFile(
-      name: String, len: Long, mtime: Long, path: String)
-
-  /** Part files of any parquet table file/dir as (name, len, mtime,
-    * path), name-sorted — THE file-identity listing every derived
-    * artifact's staleness contract keys on (events feed here, the
-    * typed layout, [[graft.operators.ZIndex]]'s clustered layout, the
-    * weather/customer dim registrations). One implementation: a change
-    * to the identity discipline (nested dirs, checksums) reaches every
-    * consumer at once instead of silently diverging four copies. */
-  private[graft] def partsOf(spark: SparkSession, path: String): Seq[PartFile] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val statuses =
-      if (fs.getFileStatus(p).isFile) Array(fs.getFileStatus(p))
-      else fs.listStatus(p).filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-    statuses.toSeq.map(s => PartFile(s.getPath.getName, s.getLen,
-      s.getModificationTime, s.getPath.toString)).sortBy(_.name)
-  }
-
-  /** The identity-string form of [[partsOf]] (one line per part file). */
-  private[graft] def stampOfPath(spark: SparkSession, path: String): String =
-    partsOf(spark, path)
-      .map(f => s"${f.name}\t${f.len}\t${f.mtime}").mkString("\n")
-
-  private def listParts(spark: SparkSession, dir: String): Seq[PartFile] =
-    partsOf(spark, s"$dir/events.parquet")
-
-  /** The feed's file-identity stamp (name/len/mtime per part file) —
-    * the same identity [[maintain]]'s mutation detector keys on, in a
-    * single-string form other derived artifacts ([[StatsJoin]]'s typed
-    * layout) can persist and compare for staleness. */
-  private[graft] def feedStamp(spark: SparkSession, dir: String): String =
-    listParts(spark, dir)
-      .map(f => s"${f.name}\t${f.len}\t${f.mtime}").mkString("\n")
-
-  /** The feed's part files as (identity-line, path) pairs — the
-    * identity lines are exactly [[feedStamp]]'s, so a consumer that
-    * persisted a stamp can diff it against this listing to find the
-    * APPEND DELTA's concrete paths ([[StatsJoin]]'s incremental layout
-    * maintenance). */
-  private[graft] def partFilesWithStamp(
-      spark: SparkSession, dir: String): Seq[(String, String)] =
-    listParts(spark, dir)
-      .map(f => (s"${f.name}\t${f.len}\t${f.mtime}", f.path))
-
-  private val GenRe = "gen-(\\d+)".r
-
-  /** Highest generation number with a `_COMMITTED` marker, if any.
-    * Shared with [[StatsJoin]]'s layout maintenance (same generation
-    * naming + commit contract). */
-  private[graft] def latestCommitted(
-      fs: org.apache.hadoop.fs.FileSystem, root: String): Option[Long] = {
-    val rp = new org.apache.hadoop.fs.Path(root)
-    if (!fs.exists(rp)) return None
-    fs.listStatus(rp).toSeq.collect {
-      case s if s.isDirectory => s.getPath.getName
-    }.collect { case GenRe(n)
-        if fs.exists(new org.apache.hadoop.fs.Path(s"$root/gen-$n/_COMMITTED")) =>
-      n.toLong
-    }.sorted.lastOption
-  }
+  private def listParts(spark: SparkSession, dir: String)
+      : Seq[Generations.PartFile] =
+    Generations.parts(spark, s"$dir/events.parquet")
 
   /** Partition-dir rel path in Spark's own escaping — the manifest key
     * and the physical layout must agree, and partition DIRECTORY names
@@ -259,31 +198,17 @@ object KmvTable {
   /** The manifest: one line per live partition, `gen<TAB>relPath`.
     * Tiny (days × types lines) and written once per maintenance —
     * driver-side text IO at planner-metadata scale. */
-  private def readManifest(
-      fs: org.apache.hadoop.fs.FileSystem, root: String,
-      gen: Long): Option[Map[String, Long]] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/gen-$gen/manifest")
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    try {
-      val txt = new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      Some(txt.split("\n").iterator.filter(_.nonEmpty).map { line =>
-        val i = line.indexOf('\t')
-        line.substring(i + 1) -> line.substring(0, i).toLong
-      }.toMap)
-    } finally in.close()
-  }
+  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
+      genDir: String): Option[Map[String, Long]] =
+    Generations.readLines(fs, s"$genDir/manifest").map(_.map { line =>
+      val i = line.indexOf('\t')
+      line.substring(i + 1) -> line.substring(0, i).toLong
+    }.toMap)
 
-  private def writeManifest(
-      fs: org.apache.hadoop.fs.FileSystem, root: String, gen: Long,
-      manifest: Map[String, Long]): Unit = {
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$root/gen-$gen/manifest"), false)
-    try out.write(manifest.toSeq.sortBy(_._1)
-      .map { case (rel, g) => s"$g\t$rel" }.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
+  private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
+      genDir: String, manifest: Map[String, Long]): Unit =
+    Generations.writeLines(fs, s"$genDir/manifest", manifest.toSeq.sortBy(_._1)
+      .map { case (rel, g) => s"$g\t$rel" })
 
   /** Read the live table a committed manifest describes. The data files
     * carry event_type/d as ordinary columns, so a list of owned dirs
@@ -319,22 +244,18 @@ object KmvTable {
     * concurrent-safe, and callers are the gate/bench harnesses). */
   def maintain(spark: SparkSession, dir: String): DataFrame = synchronized {
     val root = tableRoot(spark, dir)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(hconf)
+    val fs = Generations.fsOf(spark, root)
     val parts = listParts(spark, dir)
     import spark.implicits._
-    val currentDf = parts.map(f => (f.name, f.len, f.mtime))
-      .toDF("name", "len", "mtime")
-    val committedGen = latestCommitted(fs, root)
-    val genPath = (n: Long) => s"$root/gen-$n"
-    // legacy layouts (r9 flat dirs, r10 manifest-less full-copy gens)
-    // cannot be carried forward: their files lack the event_type/d data
+    // legacy layouts (r9 flat dirs, r10 manifest-less full-copy gens,
+    // older format markers) cannot be carried forward: their files lack
     // columns this layout reads. One-shot migrate: drop everything and
     // rebuild fresh (r10 ADVICE — no stale dirs left lingering).
-    val priorManifest = committedGen.flatMap(g => readManifest(fs, root, g))
-    val fmtOk = committedGen.exists(g => fs.exists(
-      new org.apache.hadoop.fs.Path(s"${genPath(g)}/$FormatMarker")))
-    val legacy = committedGen.isDefined && (priorManifest.isEmpty || !fmtOk)
+    val opened = Generations.open(fs, root)
+    val priorManifest = opened.latest.flatMap(g => readManifest(fs, opened.dir(g)))
+    val legacy = opened.latest.isDefined && (priorManifest.isEmpty ||
+      !fs.exists(new org.apache.hadoop.fs.Path(
+        s"${opened.dir(opened.latest.get)}/$FormatMarker")))
     if (legacy) {
       fs.delete(new org.apache.hadoop.fs.Path(root), true)
       ()
@@ -343,38 +264,20 @@ object KmvTable {
       val p = new org.apache.hadoop.fs.Path(s"$root/$d")
       if (fs.exists(p)) { fs.delete(p, true); () }
     }
-    val curGen = if (legacy) None else committedGen
-    // mutation detector + append delta in ONE pass against the consumed
-    // parquet (this is the no-op hot path — it runs on every
-    // maintenance): full-outer on file identity, keep only the anomaly
-    // rows. A consumed row with no current match means MUTATION; a
-    // current row with no consumed match is the append delta. The
-    // happy-path driver set is exactly the append delta; only a
-    // mutated corpus (the full-rebuild path) surfaces its removed-file
-    // names — the consumed HISTORY itself never lands on the driver.
-    val (stale, newParts) = curGen match {
-      case None => (false, parts)
-      case Some(g) =>
-        val consumed = spark.read.parquet(s"${genPath(g)}/consumed")
-        val anomalies = consumed.withColumn("c", lit(1))
-          .join(currentDf.withColumn("n", lit(1)),
-            Seq("name", "len", "mtime"), "full_outer")
-          .filter(col("c").isNull || col("n").isNull)
-          .select(col("name"), col("c").isNull.as("isNew"))
-          .as[(String, Boolean)].collect()
-        if (anomalies.exists(!_._2)) (true, parts)
-        else {
-          val newNames = anomalies.iterator.map(_._1).toSet
-          (false, parts.filter(f => newNames(f.name)))
-        }
-    }
+    val gens = if (legacy) Generations.open(fs, root) else opened
+    val delta = gens.diff(parts)
+    val stale = delta == Generations.Mutated
     if (stale || legacy) fullRebuilds.incrementAndGet()
     val baseManifest: Map[String, Long] =
-      if (curGen.isDefined && !stale) priorManifest.get else Map.empty
+      if (gens.latest.isDefined && !stale) priorManifest.get else Map.empty
     val base: Option[DataFrame] =
-      if (curGen.isDefined && !stale) Some(readTable(spark, root, baseManifest))
+      if (gens.latest.isDefined && !stale) Some(readTable(spark, root, baseManifest))
       else None
-    if (newParts.isEmpty && base.isDefined) return base.get
+    val newParts = delta match {
+      case Generations.Unchanged => return base.get
+      case Generations.Appended(fresh) => fresh
+      case Generations.Mutated => parts
+    }
     filesScanned.addAndGet(newParts.size)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // ONE scan of the new files feeds BOTH kept-set families: the KMV
@@ -518,20 +421,10 @@ object KmvTable {
             coalesce(col("nuv"), lit(0L)).as("nuv"),
             col("umin"), col("umax"))
     }
-    // sweep uncommitted leftovers from a crashed run, then land the new
-    // generation: ONLY touched partitions written (shadow partition
-    // columns pet/pd keep event_type/d as data columns in the files)
-    val nextN = curGen.getOrElse(-1L) + 1
-    def sweepGens(pred: Long => Boolean): Unit = {
-      val rp = new org.apache.hadoop.fs.Path(root)
-      if (fs.exists(rp)) fs.listStatus(rp).toSeq.foreach { s =>
-        s.getPath.getName match {
-          case GenRe(n) if pred(n.toLong) => fs.delete(s.getPath, true)
-          case _ => ()
-        }
-      }
-    }
-    sweepGens(_ >= nextN)
+    // land the new generation: ONLY touched partitions written (shadow
+    // partition columns pet/pd keep event_type/d as data columns in the
+    // files)
+    val nextN = gens.next
     // GENERATION COMPACTION: append-only workloads otherwise accumulate
     // one generation per maintenance run FOREVER (each keeps owning the
     // day it appended), so reads list O(runs) directories and the
@@ -566,7 +459,7 @@ object KmvTable {
         .withColumn("pet", col("event_type"))
         .withColumn("pd", col("d").cast("string"))
         .write.mode("overwrite").partitionBy("pet", "pd")
-        .parquet(s"${genPath(nextN)}/parts")
+        .parquet(s"${gens.nextDir}/parts")
     newDaily.unpersist()
     // the new manifest: untouched partitions keep their owning
     // generation (ALL partitions land here on a compaction run);
@@ -575,27 +468,17 @@ object KmvTable {
     val manifest =
       if (compact) writtenRel.iterator.map(_ -> nextN).toMap
       else untouchedOwned ++ touchedRel.iterator.map(_ -> nextN)
-    currentDf.coalesce(1).write.mode("overwrite")
-      .parquet(s"${genPath(nextN)}/consumed")
-    writeManifest(fs, root, nextN, manifest)
-    // schema-format stamp, then the COMMIT: one atomic create —
-    // readers switch generations here
+    writeManifest(fs, gens.nextDir, manifest)
+    // schema-format stamp, then the COMMIT. Kept: generations owning
+    // live partitions in the new manifest or the PRIOR COMMITTED one (in-
+    // flight lazy readers of the previous table). priorManifest, not
+    // baseManifest: on a stale rebuild baseManifest is forced empty, but
+    // the last committed manifest's references are exactly what an
+    // in-flight reader still needs (self-review r11).
     fs.create(new org.apache.hadoop.fs.Path(
-      s"${genPath(nextN)}/$FormatMarker"), false).close()
-    fs.create(new org.apache.hadoop.fs.Path(
-      s"${genPath(nextN)}/_COMMITTED"), false).close()
-    // sweep by REFERENCE: keep generations owning live partitions in
-    // the new manifest or the PRIOR COMMITTED one (in-flight lazy
-    // readers of the previous table), plus the two gen dirs
-    // themselves. priorManifest, not baseManifest: on a stale rebuild
-    // baseManifest is forced empty, but the last committed manifest's
-    // references are exactly what an in-flight reader still needs
-    // (self-review r11).
-    val live = manifest.values.toSet ++
-      (if (legacy) Set.empty[Long]
-       else priorManifest.map(_.values.toSet).getOrElse(Set.empty[Long])) ++
-      curGen.toSet + nextN
-    sweepGens(n => !live.contains(n))
+      s"${gens.nextDir}/$FormatMarker"), false).close()
+    gens.commit(parts,
+      manifest.values.toSet ++ priorManifest.fold(Set.empty[Long])(_.values.toSet))
     // catalog-statistics refresh (r11 verdict #3): every commit that
     // WROTE re-fires the registered stat injections for this corpus —
     // fired here, after the commit and sweep, so callbacks that read
@@ -653,8 +536,8 @@ object KmvTable {
     * consumers that read several views of one maintenance result
     * (e.g. [[graft.plans.SynopsisStats]] injections building key AND
     * value synopses): each `maintain` call, even the no-op fast path,
-    * costs a feed listing plus the consumed-file anti-join job, so a
-    * multi-view consumer should pay it once. */
+    * costs the feed and generation listings plus a `consumed` read, so
+    * a multi-view consumer should pay it once. */
   private[graft] def keyStatsViewOf(table: DataFrame): DataFrame =
     table.filter(col("nu") > 0)
       .select(col("event_type"), col("d"), col("nu"),

@@ -16,9 +16,8 @@ import graft.sources.Tables
   *
   * The index is a plain parquet table of per-document signatures
   * (doc_id, h0..h15 — 16 md5-permutation min-hashes), persisted and
-  * maintained by the [[ZIndex]] generation machinery (consumed-file
-  * identity, `_COMMITTED` generations, crash sweep, mutation →
-  * rebuild): an APPEND to the documents feed shingles and signs ONLY
+  * maintained as a [[ZIndex]] layout (committed through
+  * [[graft.util.Generations]]; mutation → rebuild): an APPEND to the documents feed shingles and signs ONLY
   * the new files — O(delta), LshIndexSpec pins the append counters —
   * because the signature is deliberately DOC-LOCAL: raw distinct
   * 3-gram shingles, no corpus-wide df-cap (the cap is a property of

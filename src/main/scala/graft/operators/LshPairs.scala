@@ -6,11 +6,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
+import graft.util.Generations
 
 /** The DURABLE verified-pairs store (r15 verdict #1): the MinHash+LSH
   * verified near-duplicate pairs that q45 declares and q77/q103/q144
-  * consume, persisted under the generation contract (consumed-file
-  * identity, `_COMMITTED`, crash sweep, one-prior retention) so a
+  * consume, committed through [[graft.util.Generations]] so a
   * fresh JVM LOADS the artifact instead of recomputing it — the last
   * per-JVM corpus-scale rebuild (`prewarm_lsh_pairs`, 18.9 s at sf0.1
   * and 266 s-scale at sf10, previously paid by every session) retired
@@ -69,9 +69,6 @@ object LshPairs {
     new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
   def clearMemo(): Unit = memo.clear()
 
-  private val rootLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -83,9 +80,6 @@ object LshPairs {
         s"/graft_lsh_pairs/${md5hex(dir)}")
 
   private def feedOf(dir: String): String = s"$dir/documents.parquet"
-
-  private def stampOf(feed: Seq[KmvTable.PartFile]): String =
-    feed.map(f => s"${f.name}\t${f.len}\t${f.mtime}").mkString("\n")
 
   // ------------------------------------------------------------------
   // The q44/q45 shingle/signature arithmetic, verbatim (the oracle
@@ -148,84 +142,51 @@ object LshPairs {
   // Generation machinery
   // ------------------------------------------------------------------
 
-  private val GenRe = "gen-(\\d+)".r
-
   /** Union-read one delta sub-table across the live generations. */
   private def readUnion(spark: SparkSession, r: String, gens: Seq[Long],
       sub: String): DataFrame =
     spark.read.parquet(gens.sorted.map(g => s"$r/gen-$g/$sub"): _*)
 
+  /** The generations whose deltas make up generation `g`'s store. */
   private def readLive(spark: SparkSession, r: String, g: Long): Seq[Long] =
-    spark.read.textFile(s"$r/gen-$g/live").collect().toSeq.map(_.toLong)
+    Generations.readLines(Generations.fsOf(spark, r), s"$r/gen-$g/live")
+      .getOrElse(Nil).map(_.toLong)
+
+  /** The most live generations an append may leave; beyond it
+    * [[ensure]] rebuilds in full. */
+  private val MaxGenerations = 8
 
   /** Land-or-refresh the store; returns (root, committed gen). */
   def ensure(spark: SparkSession, dir: String): (String, Long) = {
     val r = root(spark, dir)
-    rootLocks.computeIfAbsent(r, _ => new Object).synchronized {
-      val feed = KmvTable.partsOf(spark, feedOf(dir))
-      val stamp = stampOf(feed)
-      val rp = new org.apache.hadoop.fs.Path(r)
-      val fs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Generations.locked(r) {
+      val feed = Generations.parts(spark, feedOf(dir))
+      val stamp = Generations.stamp(feed)
+      val fs = Generations.fsOf(spark, r)
       Option(memo.get(r)) match {
-        case Some((s, g)) if s == stamp && fs.exists(
-            new org.apache.hadoop.fs.Path(s"$r/gen-$g/_COMMITTED")) =>
+        case Some((s, g)) if s == stamp && Generations.isCommitted(fs, r, g) =>
           return (r, g)
         case _ => ()
       }
-      val gens: Seq[Long] =
-        if (!fs.exists(rp)) Seq.empty
-        else fs.listStatus(rp).toSeq.collect {
-          case s if s.isDirectory => s.getPath.getName
-        }.collect { case GenRe(n) => n.toLong }.sorted
-      val committed = gens.filter(g =>
-        fs.exists(new org.apache.hadoop.fs.Path(s"$r/gen-$g/_COMMITTED")))
-      (gens.toSet -- committed.toSet).foreach(g =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$r/gen-$g"), true))
-      val latest = committed.lastOption
-      val nextN = committed.lastOption.map(_ + 1).getOrElse(0L)
-      val genDir = s"$r/gen-$nextN"
-
-      val consumedLines: Set[String] = latest.map { g =>
-        spark.read.textFile(s"$r/gen-$g/consumed").collect().toSet
-      }.getOrElse(Set.empty)
-      val currentLines = feed.map(f => s"${f.name}\t${f.len}\t${f.mtime}").toSet
-      val mutated = latest.isDefined && !consumedLines.subsetOf(currentLines)
-      val newFeed = feed.filter(f =>
-        !consumedLines.contains(s"${f.name}\t${f.len}\t${f.mtime}"))
-
-      if (latest.isDefined && !mutated && newFeed.isEmpty) {
+      val gens = Generations.open(fs, r)
+      val latest = gens.latest
+      val nextN = gens.next
+      val genDir = gens.nextDir
+      val delta = gens.diff(feed)
+      if (delta == Generations.Unchanged) {
         memo.put(r, (stamp, latest.get))
         return (r, latest.get)
       }
 
       val liveGens: Seq[Long] =
         latest.map(g => readLive(spark, r, g)).getOrElse(Seq.empty)
-      val maxGens = spark.conf
-        .getOption("spark.graft.lshpairs.maxGenerations")
-        .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-        .filter(_ >= 1).getOrElse(8)
 
       def commit(newLiveGens: Seq[Long]): Unit = {
-        spark.createDataset(newLiveGens.map(_.toString))(
-          org.apache.spark.sql.Encoders.STRING)
-          .coalesce(1).write.mode("overwrite").text(s"$genDir/live")
-        spark.createDataset(
-          feed.map(f => s"${f.name}\t${f.len}\t${f.mtime}"))(
-          org.apache.spark.sql.Encoders.STRING)
-          .coalesce(1).write.mode("overwrite").text(s"$genDir/consumed")
-        fs.create(new org.apache.hadoop.fs.Path(s"$genDir/_COMMITTED"),
-          false).close()
-        // one-prior retention (the ZIndex rule): gens the NEW live list
-        // references, plus the prior committed gen AND everything ITS
-        // live list references (an in-flight reader holding the prior
-        // list must still find every delta it names — on a full
-        // rebuild the new list references only nextN, so without the
-        // prior's references the whole standing chain would vanish
-        // under that reader; r16 self-review), survive
-        val keep: Set[Long] =
-          newLiveGens.toSet ++ liveGens.toSet ++ latest.toSet + nextN
-        committed.filterNot(keep.contains).foreach(g =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$r/gen-$g"), true))
+        Generations.writeLines(fs, s"$genDir/live", newLiveGens.map(_.toString))
+        // the prior live list's references survive too: on a full
+        // rebuild the new list references only nextN, and an in-flight
+        // reader holding the prior list must still find every delta
+        gens.commit(feed, newLiveGens.toSet ++ liveGens)
         memo.put(r, (stamp, nextN))
       }
 
@@ -278,16 +239,19 @@ object LshPairs {
         stamp("commit")
       }
 
-      if (latest.isEmpty || mutated || liveGens.size + 1 > maxGens) {
-        fullBuild()
-        return (r, nextN)
+      val newFeed = delta match {
+        case Generations.Appended(fresh) if latest.isDefined &&
+            liveGens.size + 1 <= MaxGenerations => fresh
+        case _ =>
+          fullBuild()
+          return (r, nextN)
       }
 
       // ---------------- incremental append ----------------
-      val delta = spark.read.parquet(newFeed.map(_.path): _*)
+      val deltaDocs = spark.read.parquet(newFeed.map(_.path): _*)
         .select(col("doc_id"), col("text"))
         .repartition(32) // same fan as the full build
-      val newShRaw = rawShingles(delta).cache()
+      val newShRaw = rawShingles(deltaDocs).cache()
       try {
         val deltaDf = newShRaw.groupBy(col("sh"))
           .agg(count(lit(1)).as("ddf"))
@@ -384,25 +348,19 @@ object LshPairs {
     * the O(log n) contraction over the pair set, KB-to-MB scale, never
     * the corpus. A fresh JVM on an unchanged corpus LOADS them (with
     * the pairs, this retires the whole `prewarm_lsh_pairs` rebuild to
-    * O(read)). Written once per generation under its own marker; the
-    * generation's own `_COMMITTED` content contract is untouched
-    * (pairs readers never list the gen dir). */
+    * O(read)). Landed once per generation under the store's root lock
+    * ([[graft.util.Generations.landOnce]]: the parquet `_SUCCESS` is the
+    * marker); the generation's own commit is untouched (pairs readers
+    * never list the gen dir). */
   def labels(spark: SparkSession, dir: String): DataFrame = {
     val (r, g) = ensure(spark, dir)
-    val labDir = s"$r/gen-$g/labels"
-    val marker = new org.apache.hadoop.fs.Path(s"$labDir/_LABELS_COMMITTED")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker))
-      rootLocks.computeIfAbsent(r, _ => new Object).synchronized {
-        if (!fs.exists(marker)) {
-          labelBuilds.incrementAndGet()
-          val p = readUnion(spark, r, readLive(spark, r, g), "pairs_delta")
-          GraphOps.connectedComponentsStar(
-            p.select(col("doc_a"), col("doc_b")))
-            .write.mode("overwrite").parquet(s"$labDir/data")
-          fs.create(marker, false).close()
-        }
-      }
-    spark.read.parquet(s"$labDir/data")
+    val data = s"$r/gen-$g/labels/data"
+    Generations.landOnce(spark, data, r) {
+      labelBuilds.incrementAndGet()
+      val p = readUnion(spark, r, readLive(spark, r, g), "pairs_delta")
+      GraphOps.connectedComponentsStar(p.select(col("doc_a"), col("doc_b")))
+        .write.mode("overwrite").parquet(data)
+    }
+    spark.read.parquet(data)
   }
 }

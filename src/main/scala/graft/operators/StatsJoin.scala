@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.plans.{JoinSynopsis, SynopsisStats, ValueSynopsis}
 import graft.sources.Tables
+import graft.util.Generations
 
 /** q169 — a DECLARED query whose PLAN comes from the statistics
   * catalog, end-to-end (r11 verdict #1): Catalyst's own cost-based
@@ -36,13 +37,11 @@ import graft.sources.Tables
   * The per-type TABLES are a durable, INCREMENTALLY-maintained layout
   * of the corpus (`pt=<type>/pd=<day>/` parquet — the
   * partition-by-type-and-day layout any production events pipeline
-  * lands anyway), maintained under the KmvTable consistency contract:
-  * consumed-file identity tracking, manifest GENERATIONS (an append
-  * reads only the new feed files and REWRITES only the touched
-  * (type, day) partitions into a fresh committed generation; untouched
-  * partitions ride forward by manifest reference), atomic `_COMMITTED`
-  * markers, reference sweeping with one-prior retention for in-flight
-  * readers, and full rebuild on corpus MUTATION. The catalog side is
+  * lands anyway), committed through [[graft.util.Generations]] with
+  * KmvTable's manifest GENERATIONS (an append reads only the new feed
+  * files and REWRITES only the touched (type, day) partitions into a
+  * fresh generation; untouched partitions ride forward by manifest
+  * reference; a corpus MUTATION rebuilds). The catalog side is
   * Spark-native: each type is an external PARTITIONED catalog table
   * whose per-partition LOCATIONs point into the owning generation dirs
   * — the manifest expressed as Spark's own partition metadata, synced
@@ -81,7 +80,7 @@ object StatsJoin {
     * a child session (q169/q170 run their SQL in one) sees the same
     * entries. Per-call freshness reduces to one feed listing: the
     * stamp IS ensureTypedLayout's no-op condition, so a hit skips the
-    * layout listing-and-anti-join, the vanished-table sweep, and the
+    * layout listing-and-consumed-diff, the vanished-table sweep, and the
     * per-type partition diff (~0.5 s + O(catalog) metadata at sf10,
     * 100% of the steady-state premium the r12 verdict flagged). */
   private val regMemo = new java.util.concurrent.ConcurrentHashMap[
@@ -113,13 +112,6 @@ object StatsJoin {
     regMemo.clear(); statsMemo.clear(); aliasMemo.clear()
   }
 
-  /** Layout maintenance serializes per layout ROOT, not JVM-globally: a
-    * cold corpus-scale build (~23 s at sf10) must not block concurrent
-    * sessions maintaining OTHER corpora (the r12 verdict's lock-scope
-    * nit); two writers of the SAME root still serialize. */
-  private val rootLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   /** Stats-planned consumer names that ran in this JVM — the sibling
     * universe the stats-off arm's refresher sweep iterates (a
     * refresher can only have been registered by a stats-on call here,
@@ -146,26 +138,6 @@ object StatsJoin {
   private def unesc(v: String): String =
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(v)
 
-  private def readText(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8"))
-      finally in.close()
-    }
-  }
-
-  private def writeText(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, s: String): Unit = {
-    val out = fs.create(new org.apache.hadoop.fs.Path(path), false)
-    try out.write(s.getBytes("UTF-8")) finally out.close()
-  }
-
-  private val GenRe = "gen-(\\d+)".r
-
   /** Bring the per-type layout up to date with `dir`'s feed and return
     * the live partition map: (type, day) → owning partition dir. The
     * KmvTable maintenance contract, applied to ROWS instead of
@@ -173,80 +145,52 @@ object StatsJoin {
     * shadow partition dirs `pt=<type>/pd=<day>`; null-user rows
     * dropped — they can never satisfy the equi-join):
     *
-    *  - consumed-file identity (name, len, mtime): a no-op returns by
+    *  - a no-op ([[graft.util.Generations]]' consumed diff) returns by
     *    manifest reference with ZERO feed reads; an APPEND reads only
     *    the new files, merges only the touched (type, day) partitions
     *    (prior partition rows ∪ new rows — the layout mirrors the
     *    append-only feed, so the merge is a plain union) and writes
-    *    only them into gen-(n+1); a MUTATED corpus forces a full
+    *    only them into the next generation; a MUTATED corpus forces a full
     *    rebuild;
     *  - the manifest (`gen<TAB>type<TAB>day`, escaped) maps every live
-    *    partition to its owning generation; commit = atomic
-    *    `_COMMITTED` create; sweep keeps generations referenced by the
-    *    new OR the prior committed manifest (in-flight lazy readers),
-    *    and clears uncommitted leftovers of crashed runs first. */
+    *    partition to its owning generation; the commit keeps
+    *    generations referenced by the new OR the prior committed
+    *    manifest (in-flight lazy readers). Layout maintenance serializes
+    *    per layout ROOT: a cold corpus-scale build (~23 s at sf10) must
+    *    not block sessions maintaining OTHER corpora. */
   def ensureTypedLayout(spark: SparkSession, dir: String)
       : Map[(String, String), String] = {
     val root = layoutRoot(spark, dir)
-    rootLocks.computeIfAbsent(root, _ => new Object).synchronized {
-      ensureTypedLayoutLocked(spark, dir, root)
-    }
+    Generations.locked(root) { ensureTypedLayoutLocked(spark, dir, root) }
   }
 
   private def ensureTypedLayoutLocked(spark: SparkSession, dir: String,
       root: String): Map[(String, String), String] = {
-    val rp = new org.apache.hadoop.fs.Path(root)
-    val fs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Generations.fsOf(spark, root)
     def partDir(g: Long, t: String, d: String): String =
       s"$root/gen-$g/parts/pt=${esc(t)}/pd=${esc(d)}"
     def dirsOf(m: Map[(String, String), Long]): Map[(String, String), String] =
       m.map { case ((t, d), g) => (t, d) -> partDir(g, t, d) }
-    // one-time migration sweep: the pre-manifest layout used
-    // gen-<stampHash> dir names the numeric sweeps can never match —
-    // left alone they leak a corpus-scale dir forever (the KmvTable
-    // legacy-migration contract: stale dirs deleted, not lingering)
-    if (fs.exists(rp)) fs.listStatus(rp).toSeq.foreach { s =>
-      val n = s.getPath.getName
-      if (s.isDirectory && n.startsWith("gen-") &&
-          !GenRe.pattern.matcher(n).matches()) {
-        fs.delete(s.getPath, true); ()
+    val parts = Generations.parts(spark, s"$dir/events.parquet")
+    // also sweeps the pre-manifest layout's gen-<stampHash> dirs
+    val gens = Generations.open(fs, root)
+    val priorManifest: Map[(String, String), Long] = gens.latest.toSeq.flatMap { g =>
+      Generations.readLines(fs, s"${gens.dir(g)}/manifest").getOrElse(Nil).map { line =>
+        val Array(gen, t, d) = line.split("\t", 3)
+        (unesc(t), unesc(d)) -> gen.toLong
       }
-    }
-    val parts = KmvTable.partFilesWithStamp(spark, dir)
-    val curSet = parts.map(_._1).toSet
-    val committed: Option[Long] = KmvTable.latestCommitted(fs, root)
-    val priorManifest: Map[(String, String), Long] = committed.toSeq.flatMap { g =>
-      readText(fs, s"$root/gen-$g/manifest").toSeq.flatMap(
-        _.split("\n").iterator.filter(_.nonEmpty).map { line =>
-          val Array(gen, t, d) = line.split("\t", 3)
-          (unesc(t), unesc(d)) -> gen.toLong
-        })
     }.toMap
-    val priorConsumed: Set[String] = committed.flatMap(g =>
-      readText(fs, s"$root/gen-$g/consumed"))
-      .map(_.split("\n").iterator.filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
-    if (committed.isDefined && priorConsumed == curSet)
-      return dirsOf(priorManifest)
-    // a consumed file no longer listed with the same identity means the
-    // corpus was MUTATED, not appended — full rebuild (as in KmvTable)
-    val mutated = committed.isEmpty || !priorConsumed.subsetOf(curSet)
-    if (mutated) layoutBuilds.incrementAndGet()
-    val newPaths =
-      if (mutated) parts.map(_._2)
-      else parts.collect { case (l, p) if !priorConsumed(l) => p }
+    val (rebuild, newParts) = gens.diff(parts) match {
+      case Generations.Unchanged => return dirsOf(priorManifest)
+      case Generations.Appended(fresh) if gens.latest.isDefined => (false, fresh)
+      case _ => (true, parts)
+    }
+    if (rebuild) layoutBuilds.incrementAndGet()
+    val newPaths = newParts.map(_.path)
     layoutFilesScanned.addAndGet(newPaths.size)
     val base: Map[(String, String), Long] =
-      if (mutated) Map.empty else priorManifest
-    val nextN = committed.getOrElse(-1L) + 1
-    def sweepGens(pred: Long => Boolean): Unit =
-      if (fs.exists(rp)) fs.listStatus(rp).toSeq.foreach { s =>
-        s.getPath.getName match {
-          case GenRe(n) if pred(n.toLong) => fs.delete(s.getPath, true); ()
-          case _ => ()
-        }
-      }
-    sweepGens(_ >= nextN) // uncommitted leftovers of crashed runs
+      if (rebuild) Map.empty else priorManifest
+    val nextN = gens.next
     // generation COMPACTION (the KmvTable rule at row scale), made
     // PER-PARTITION this round (r12 verdict #4): when the prospective
     // manifest would reference more than
@@ -362,17 +306,10 @@ object StatsJoin {
           } ++ touched.iterator.map(_ -> nextN)
         } finally { newRows.unpersist(); () }
       }
-    writeText(fs, s"$root/gen-$nextN/consumed",
-      parts.map(_._1).mkString("\n"))
-    writeText(fs, s"$root/gen-$nextN/manifest",
+    Generations.writeLines(fs, s"${gens.nextDir}/manifest",
       manifest.toSeq.sortBy(_._1)
-        .map { case ((t, d), g) => s"$g\t${esc(t)}\t${esc(d)}" }
-        .mkString("\n"))
-    fs.create(new org.apache.hadoop.fs.Path(
-      s"$root/gen-$nextN/_COMMITTED"), false).close()
-    val live = manifest.values.toSet ++ priorManifest.values.toSet ++
-      committed.toSet + nextN
-    sweepGens(n => !live.contains(n))
+        .map { case ((t, d), g) => s"$g\t${esc(t)}\t${esc(d)}" })
+    gens.commit(parts, manifest.values.toSet ++ priorManifest.values)
     dirsOf(manifest)
   }
 
@@ -403,14 +340,14 @@ object StatsJoin {
     // generation (one tiny root listing) so an externally wiped layout
     // self-heals by re-sync instead of serving partitions that point
     // at dead paths.
-    val stamp = KmvTable.feedStamp(spark, dir)
+    val stamp = Generations.stampOf(spark, s"$dir/events.parquet")
     val memoKey = (spark.sharedState: AnyRef, layoutRoot(spark, dir))
     Option(regMemo.get(memoKey)) match {
       case Some((s, tbls)) if s == stamp &&
           tbls.values.forall(spark.catalog.tableExists) && {
-            val rp = new org.apache.hadoop.fs.Path(layoutRoot(spark, dir))
-            val lfs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            KmvTable.latestCommitted(lfs, layoutRoot(spark, dir)).isDefined
+            val root = layoutRoot(spark, dir)
+            Generations.latestCommitted(Generations.fsOf(spark, root), root)
+              .isDefined
           } =>
         return (stamp, tbls)
       case _ => ()
@@ -663,8 +600,8 @@ object StatsJoin {
       calibrated: Seq[(String, Seq[String])]): Unit = {
     statsInjections.incrementAndGet()
     // ONE maintenance resolution feeds both synopsis families (each
-    // maintain call, even a no-op, pays the feed listing + consumed
-    // anti-join job — measured ~0.4 s apiece at sf10)
+    // maintain call, even a no-op, pays the feed and generation
+    // listings + a consumed read)
     val t = KmvTable.maintain(spark, dir)
     val keySyns = JoinSynopsis.fromTable(spark, dir, Some(t))
     val valSyns = ValueSynopsis.fromTable(spark, dir, Some(t))

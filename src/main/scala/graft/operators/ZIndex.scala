@@ -9,6 +9,7 @@ import org.apache.spark.sql.types._
 import graft.plans.{AllNullZone, ColZone, DecimalZone, DoubleZone, KeepAllZone,
   LongZone, StringZone, ZoneFile, ZoneMapFileIndex}
 import graft.sources.Tables
+import graft.util.Generations
 
 /** A table's z-layout contract: where its feed lives, how to load the
   * corpus, which two dimensions drive the Morton clustering, and how
@@ -74,9 +75,8 @@ case class ZTable(name: String,
   * files are; clustering quality only decides HOW MANY files survive
   * (ZIndexSpec pins ~1/16 of the corpus for a 1%-of-z-space box).
   *
-  * Maintenance follows the KmvTable contract: consumed-file identity,
-  * generation dirs with atomic `_COMMITTED`, crash-leftover sweep,
-  * one-prior retention for in-flight readers, mutation → full rebuild.
+  * Maintenance commits through [[graft.util.Generations]] (consumed-file
+  * identity, crash sweep, one-prior retention, mutation → full rebuild).
   * An APPEND clusters only the new feed files — among themselves, into
   * proportionally many files — and unions their zone-map rows with the
   * standing ones (the appended files carry their own exact bounds, so
@@ -157,9 +157,6 @@ object ZIndex {
     memo.clear(); entryMemo.clear(); schemaMemo.clear()
   }
 
-  private val rootLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -173,13 +170,8 @@ object ZIndex {
           s"/graft_zindex2/${t.name}_${md5hex(dir)}"
       })
 
-  // file-identity listing shared with every derived artifact
-  // ([[KmvTable.partsOf]] — one implementation of the stamp discipline)
   private def listFeed(spark: SparkSession, dir: String, t: ZTable)
-      : Seq[KmvTable.PartFile] = KmvTable.partsOf(spark, t.feedOf(dir))
-
-  private def stampOf(feed: Seq[KmvTable.PartFile]): String =
-    feed.map(f => s"${f.name}\t${f.len}\t${f.mtime}").mkString("\n")
+      : Seq[Generations.PartFile] = Generations.parts(spark, t.feedOf(dir))
 
   /** Which zone encoding a schema type gets — `None` is not recorded
     * (and therefore never refutes). Long carries bigint, int, date
@@ -417,8 +409,6 @@ object ZIndex {
     spark.createDataFrame(mapRows.asJava, mapSchema)
   }
 
-  private val GenRe = "gen-(\\d+)".r
-
   /** Land-or-refresh the clustered layout; returns (root, committed
     * gen). One feed listStatus on the memo-hit path. */
   def ensure(spark: SparkSession, dir: String): (String, Long) =
@@ -426,49 +416,31 @@ object ZIndex {
 
   def ensure(spark: SparkSession, dir: String, t: ZTable): (String, Long) = {
     val r = root(spark, dir, t)
-    rootLocks.computeIfAbsent(r, _ => new Object).synchronized {
+    Generations.locked(r) {
       val feed = listFeed(spark, dir, t)
-      val stamp = stampOf(feed)
-      val rp = new org.apache.hadoop.fs.Path(r)
-      val fs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val stamp = Generations.stamp(feed)
+      val fs = Generations.fsOf(spark, r)
       Option(memo.get(r)) match {
         // one existence probe alongside the stamp: an externally wiped
         // layout (tmp cleaner) must fall through to a rebuild, not
         // serve dead paths off the memo
-        case Some((s, g)) if s == stamp && fs.exists(
-            new org.apache.hadoop.fs.Path(s"$r/gen-$g/_COMMITTED")) =>
+        case Some((s, g)) if s == stamp && Generations.isCommitted(fs, r, g) =>
           return (r, g)
         case _ => ()
       }
-      val gens: Seq[Long] =
-        if (!fs.exists(rp)) Seq.empty
-        else fs.listStatus(rp).toSeq.collect {
-          case s if s.isDirectory => s.getPath.getName
-        }.collect { case GenRe(n) => n.toLong }.sorted
-      val committed = gens.filter(g =>
-        fs.exists(new org.apache.hadoop.fs.Path(s"$r/gen-$g/_COMMITTED")))
-      // crash-leftover sweep: uncommitted gens above the high-water mark
-      (gens.toSet -- committed.toSet).foreach(g =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$r/gen-$g"), true))
-      val latest = committed.lastOption
-      val nextN = committed.lastOption.map(_ + 1).getOrElse(0L)
-      val genDir = s"$r/gen-$nextN"
+      val gens = Generations.open(fs, r)
+      val latest = gens.latest
+      val nextN = gens.next
+      val genDir = gens.nextDir
       val genName = s"gen-$nextN"
-
-      // consumed-identity diff (the KmvTable mutation detector): a
-      // consumed line that vanished from the feed means MUTATION; the
-      // surplus current lines are the append delta
-      val consumedLines: Set[String] = latest.map { g =>
-        spark.read.textFile(s"$r/gen-$g/consumed").collect().toSet
-      }.getOrElse(Set.empty)
-      val currentLines = feed.map(f => s"${f.name}\t${f.len}\t${f.mtime}").toSet
-      val mutated = latest.isDefined && !consumedLines.subsetOf(currentLines)
-      val newFeed = feed.filter(f =>
-        !consumedLines.contains(s"${f.name}\t${f.len}\t${f.mtime}"))
-
-      if (latest.isDefined && !mutated && newFeed.isEmpty) {
+      val delta = gens.diff(feed)
+      if (delta == Generations.Unchanged) {
         memo.put(r, (stamp, latest.get))
         return (r, latest.get)
+      }
+      val newFeed = delta match {
+        case Generations.Appended(fresh) => fresh
+        case _ => feed
       }
 
       val priorMap: Option[DataFrame] = latest.map(g =>
@@ -478,10 +450,11 @@ object ZIndex {
         .filter(_ >= 1).getOrElse(8)
       val liveGens: Set[Long] = priorMap.map(_.select(col("file"))
         .as(org.apache.spark.sql.Encoders.STRING).collect()
-        .map(f => f.split("/")(0)).collect { case GenRe(n) => n.toLong }
+        .map(f => f.split("/")(0).stripPrefix("gen-").toLong)
         .toSet).getOrElse(Set.empty)
 
-      val full = latest.isEmpty || mutated || liveGens.size + 1 > maxGens
+      val full = latest.isEmpty || delta == Generations.Mutated ||
+        liveGens.size + 1 > maxGens
       val zonemap: DataFrame =
         if (full) {
           // initial build, mutation rebuild, or the periodic global
@@ -498,12 +471,12 @@ object ZIndex {
         } else {
           zAppends.incrementAndGet()
           zFeedFilesScanned.addAndGet(newFeed.size)
-          val delta = {
+          val fed = {
             val d = spark.read.parquet(newFeed.map(_.path): _*)
               .select(t.load(spark, dir).columns.map(col): _*)
             if (t.prepFan > 0) d.repartition(t.prepFan) else d
           }
-          val newRows = t.prep.foldLeft(delta)((df, f) => f(df))
+          val newRows = t.prep.foldLeft(fed)((df, f) => f(df))
             .cache()
           try {
             // proportionally many files for the delta (≥1): appended
@@ -519,19 +492,9 @@ object ZIndex {
           } finally { newRows.unpersist(); () }
         }
       zonemap.coalesce(1).write.mode("overwrite").parquet(s"$genDir/zonemap")
-      spark.createDataset(feed.map(f => s"${f.name}\t${f.len}\t${f.mtime}"))(
-        org.apache.spark.sql.Encoders.STRING)
-        .coalesce(1).write.mode("overwrite").text(s"$genDir/consumed")
-      fs.create(new org.apache.hadoop.fs.Path(s"$genDir/_COMMITTED"), false)
-        .close()
-      // one-prior retention: gens referenced by the NEW or the PRIOR
-      // committed zone map (plus the prior gen itself — it holds the
-      // zone map an in-flight reader may have collected but not yet
-      // opened data files through) survive; everything else is
-      // reclaimed. The new map's gens are always ⊆ liveGens + nextN.
-      val newLive: Set[Long] = liveGens ++ latest.toSet + nextN
-      committed.filterNot(newLive.contains).foreach(g =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$r/gen-$g"), true))
+      // retention: the new map's gens are always ⊆ the prior map's
+      // (liveGens) + nextN
+      gens.commit(feed, liveGens)
       // entries memoized for superseded generations can never be
       // re-resolved (resolveEntries always lands on the latest commit)
       // — evict them so a long-lived JVM with many maintenance commits
@@ -826,7 +789,7 @@ object ZIndex {
       new org.apache.hadoop.fs.Path(r),
       () => resolveEntries(spark, dir, t))
     lastPlannedIndex.set(Some(index))
-    val stamp = stampOf(listFeed(spark, dir, t))
+    val stamp = Generations.stamp(listFeed(spark, dir, t))
     val schema = Option(schemaMemo.get(r)) match {
       case Some((s, sch)) if s == stamp => sch
       case _ =>

@@ -333,8 +333,8 @@ object EventsStream {
     * identity. */
   def statsCustDim(spark: SparkSession, dir: String): DataFrame = {
     val tbl = custDimTable(dir)
-    val stamp = graft.operators.KmvTable.stampOfPath(
-      spark, s"$dir/customer.parquet")
+    val stamp =
+      graft.util.Generations.stampOf(spark, s"$dir/customer.parquet")
     val key = (spark.sharedState: AnyRef, dir)
     if (Option(dimMemo.get(key)).contains(stamp) &&
         spark.catalog.tableExists(tbl))

@@ -71,12 +71,12 @@ object WeatherStats {
 
   /** File-identity stamp of corpus `d`'s source `tables`, one entry per
     * table: an RPC-cheap listStatus each, the same identity discipline
-    * as KmvTable.feedStamp. The dims key on customer (feeds stations)
+    * as every generation's `consumed` ([[graft.util.Generations]]). The dims key on customer (feeds stations)
     * and nation (feeds postal — [[WeatherSynth]]), so an events change
     * never re-lands them; gold adds the events feed. */
   private[weather] def sourceStamp(s: SparkSession, d: String,
       tables: Seq[String]): Seq[String] =
-    tables.map(t => graft.operators.KmvTable.stampOfPath(s, s"$d/$t"))
+    tables.map(t => graft.util.Generations.stampOf(s, s"$d/$t"))
 
   /** Catalog table names for a corpus dir (spec surface). */
   private[graft] def dimTableNames(d: String): (String, String) =

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Layout, ZIndex, ZTable}
 import WeatherStats.id8
 import graft.plans.ZoneMapFileIndex
+import graft.util.Generations
 
 /** The weather SERVE path riding the z-skipping layer: gold — the
   * table every API read hits — landed once per corpus as a durable
@@ -26,8 +27,8 @@ import graft.plans.ZoneMapFileIndex
   * q24/q25/q27 against unchanged SQL — the results do not move, only
   * the scan does).
   *
-  * The layout rides the full [[ZIndex]] maintenance contract
-  * (generations, `_COMMITTED`, mutation → rebuild) over a
+  * The layout rides [[ZIndex]] maintenance ([[graft.util.Generations]]:
+  * committed generations, mutation → rebuild) over a
   * STAMP-ADDRESSED landing of gold ([[WeatherStats.dims]]'
   * discipline): a corpus regenerated in place lands fresh gold to a
   * new dir, and the layout's consumed-identity diff sees the swap as
@@ -45,8 +46,8 @@ object WeatherZServe {
     * no gold re-land, no recluster (WeatherGoldDurableSpec pins the
     * zero-build re-resolve). Landings are stamp-addressed (corpus
     * regeneration lands to a new subdir) and committed by the parquet
-    * `_SUCCESS` marker; the z-layouts above them ride ZIndex's own
-    * `_COMMITTED` generation contract. */
+    * `_SUCCESS` marker ([[Generations.landOnce]]); the z-layouts above
+    * them commit through [[Generations]]. */
   private def goldRoot(s: SparkSession): String =
     s.conf.getOption("spark.graft.weather.goldDir")
       .getOrElse(sys.props("java.io.tmpdir") + "/graft_wx_gold")
@@ -80,31 +81,6 @@ object WeatherZServe {
   private lazy val bronzeRoot: String =
     WeatherStats.jvmTempRoot("graft_bronze_weather_")
 
-  private def exists(s: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  private val landLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Land a stamp-addressed parquet `path` once: `write` runs under the
-    * path's own lock, held only across the write, and only while the
-    * parquet `_SUCCESS` commit marker is missing (a crash leftover
-    * without one is overwritten whole). A committed landing — written
-    * by this JVM or, on the durable gold root, a prior one — costs one
-    * marker probe and no lock. A committed path is never re-landed:
-    * re-landing would Overwrite its part files while an
-    * already-analyzed frame still references them. */
-  private def landOnce(s: SparkSession, path: String)(write: => Unit)
-      : String = {
-    if (!exists(s, s"$path/_SUCCESS"))
-      landLocks.computeIfAbsent(path, _ => new Object).synchronized {
-        if (!exists(s, s"$path/_SUCCESS")) write
-      }
-    path
-  }
-
   /** One generation of one (session, corpus dir): the gold root and
     * source stamp it was built for (events + both dim sources, one
     * entry per table), the stamp-addressed bronze and gold landings
@@ -116,7 +92,7 @@ object WeatherZServe {
     * ones, so no cycle can form:
     *   1. the entry's `serveLock` — building its serve relations;
     *   2. a ZIndex root lock — the layout builds behind them;
-    *   3. the gold landing's path lock ([[landOnce]]);
+    *   3. the gold landing's path lock ([[Generations.landOnce]]);
     *   4. the entry's monitor — building one of its frames (builders
     *      nest: goldObs builds stgObs), or retiring it;
     *   5. the bronze landing's path lock, or WeatherStats.dims' lock.
@@ -165,18 +141,18 @@ object WeatherZServe {
       * sql/schema.sql:278-292) makes that filter prune at the reader
       * (WeatherBronzeSpec). Rows are identical to the raw feed. */
     def landBronze(): String =
-      landOnce(s, bronzePath)(
+      Generations.landOnce(s, bronzePath)(
         graft.sources.Bronze.landEvents(s, d, bronzePath))
 
     /** The committed gold landing, if any: one marker probe, no lock. */
     def committedGold: Option[String] =
-      Some(goldPath).filter(p => exists(s, s"$p/_SUCCESS"))
+      Some(goldPath).filter(Generations.landed(s, _))
 
     /** Land the unified gold (observations + forecasts — the
       * reference's single `weather_data_gold` table) once per stamp;
       * returns the landed parquet path. The write is one pass over
       * this generation's gold frames. */
-    def landGold(): String = landOnce(s, goldPath) {
+    def landGold(): String = Generations.landOnce(s, goldPath) {
       landWrites.incrementAndGet()
       WeatherQueries.goldUnified(this)
         .write.mode("overwrite").parquet(goldPath)
@@ -410,9 +386,9 @@ object WeatherZServe {
   private final case class Held(df: DataFrame, idx: ZoneMapFileIndex,
       root: String, gen: Long, latest: Option[Long]) {
     /** The probe [[ZIndex.ensure]] keeps for an externally wiped
-      * layout: the generation's `_COMMITTED` marker still exists. */
+      * layout: the generation is still committed. */
     def committed(s: SparkSession): Boolean =
-      exists(s, s"$root/gen-$gen/_COMMITTED")
+      Generations.isCommitted(Generations.fsOf(s, root), root, gen)
   }
 
   /** The serve relations of one generation. `gold` is the TYPE-PURE
@@ -437,7 +413,7 @@ object WeatherZServe {
   }
 
   /** The current generation's serve relations. A hit costs the source
-    * stamp and the two `_COMMITTED` probes; a new generation or a
+    * stamp and the two commit-marker probes; a new generation or a
     * missing marker rebuilds through the ordinary [[ZIndex.zFrame]] /
     * [[ZIndex.ensure]] path, once, under the generation's serve lock. */
   private def served(s: SparkSession, d: String): Served = {
