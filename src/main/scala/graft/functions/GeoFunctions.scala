@@ -31,13 +31,6 @@ object GeoFunctions {
     lit(2 * EarthRadiusKm) * asin(sqrt(a))
   }
 
-  /** Squared planar distance in degrees² — cheap cross-engine-deterministic
-    * prefilter (multiply/add only, no trig) for radius joins; exact
-    * haversine applies after. At Berlin latitudes 1° ≈ 111 km N-S.
-    */
-  def dist2Deg(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column =
-    pow(lat1 - lat2, 2) + pow(lon1 - lon2, 2)
-
   /** Geohash-style integer grid cell at `cellDeg` resolution; equi-join key
     * for the scale path of the spatial join (SURVEY §4.2): join on cell ±
     * neighbor cells, then exact-distance post-filter. Avoids the broadcast

@@ -80,19 +80,18 @@ case class QuantileSketch(
 
   /** Cap-insert: keep the ≤ k smallest distinct hashes. put on an
     * already-present hash REPLACES (same row identity ⇒ same value) and
-    * must not evict — guard on put's return, the TreeMap form of the
-    * TreeSet duplicate-eviction guard. */
+    * leaves the size alone, so only a NEW hash can push the map past k
+    * — and then the largest goes: the TreeMap form of the TreeSet
+    * duplicate-eviction guard, read off the size rather than off put's
+    * return (typed `scala.Long`, which the compiler holds is never
+    * null). */
   private def insert(
       buf: java.util.TreeMap[UTF8String, Long],
-      h: UTF8String, v: Long, owned: Boolean): Unit = {
-    if (buf.size < k) {
-      if (buf.put(if (owned) h else h.clone(), v) != null) () // replaced
-    } else if (h.compareTo(buf.lastKey()) < 0) {
-      if (buf.put(if (owned) h else h.clone(), v) == null) {
-        buf.pollLastEntry(); ()
-      }
+      h: UTF8String, v: Long, owned: Boolean): Unit =
+    if (buf.size < k || h.compareTo(buf.lastKey()) < 0) {
+      buf.put(if (owned) h else h.clone(), v)
+      if (buf.size > k) { buf.pollLastEntry(); () }
     }
-  }
 
   override def update(
       buf: java.util.TreeMap[UTF8String, Long],
@@ -113,10 +112,8 @@ case class QuantileSketch(
     // other ascends: first hash past the cap ends the merge
     while (go && it.hasNext) {
       val e = it.next()
-      if (buf.size < k) { buf.put(e.getKey, e.getValue); () }
-      else if (e.getKey.compareTo(buf.lastKey()) < 0) {
-        if (buf.put(e.getKey, e.getValue) == null) { buf.pollLastEntry(); () }
-      }
+      if (buf.size < k || e.getKey.compareTo(buf.lastKey()) < 0)
+        insert(buf, e.getKey, e.getValue, owned = true)
       else go = false
     }
     buf

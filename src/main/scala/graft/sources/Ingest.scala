@@ -111,14 +111,6 @@ object Ingest {
     records.select(col("source_id")).distinct()
       .join(stations.select(col("source_id")), Seq("source_id"), "left_anti")
 
-  /** S7 registry merge: per-station GREATEST(last_record) (reference
-    * `observations.py:119-128`).
-    */
-  def mergeStationRegistry(updates: DataFrame): DataFrame =
-    updates.groupBy(col("source_id"))
-      .agg(max(col("last_record")).as("last_record_date"),
-        max(col("station_name")).as("station_name"))
-
   /** A7 incremental watermark (reference `observations.py:144-157`). */
   def watermark(df: DataFrame, tsCol: String): Option[java.sql.Timestamp] =
     Option(df.agg(max(col(tsCol))).head().getTimestamp(0))

@@ -128,7 +128,7 @@ object WeatherQueries {
     * range-sampling job and shuffle would cost more than the sort. The
     * plan has no range exchange: one Spark job per call. Trade-off: the
     * pruned scan runs as a single task, and on the stats-less fallback
-    * (the two-pass view) that task reads the whole obs layout. */
+    * (the two-pass view) that task reads every observation file. */
   def latestObs(s: SparkSession, d: String): DataFrame =
     WeatherZServe.latestObsServed(s, d)._1
       .coalesce(1).orderBy(col("postal_code"))

@@ -138,6 +138,46 @@ class QuantileSpec extends SparkSpec {
     assert(runs(0) == runs(1) && runs(1) == runs(2))
   }
 
+  test("more than k distinct hashes in one group keep exactly the k " +
+      "smallest, through update and through merge") {
+    import graft.functions.QuantileSketch
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.{LongType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val k = 8
+    val agg = QuantileSketch(BoundReference(0, StringType, nullable = false),
+      BoundReference(1, LongType, nullable = false), k)
+    val xs = (0 until 5 * k).map(i => (f"h$i%04d", i.toLong))
+    def kept(b: java.util.TreeMap[UTF8String, Long]) =
+      agg.eval(b).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+        .array.toSeq.map { case r: InternalRow =>
+          (r.getUTF8String(0).toString, r.getLong(1)) }
+    // descending: every row past the k-th undercuts the kept maximum, so
+    // each must evict it
+    def fed(rows: Seq[(String, Long)]) =
+      rows.foldLeft(agg.createAggregationBuffer())((b, r) =>
+        agg.update(b, InternalRow(UTF8String.fromString(r._1), r._2)))
+    def bottomK(rows: Seq[(String, Long)]) = rows.sortBy(_._1).take(k)
+    val viaUpdate = fed(xs.reverse)
+    assert(kept(viaUpdate) === bottomK(xs))
+    // both sides full and interleaved: merging must evict too
+    val (even, odd) = xs.partition(_._2 % 2 == 0)
+    val viaMerge = agg.merge(fed(odd.reverse), fed(even.reverse))
+    assert(kept(viaMerge) === bottomK(xs))
+
+    // end to end: partial buffers over 8 partitions, serialized and merged
+    import spark.implicits._
+    val df = spark.range(0, 2000, 1, 8)
+      .select(md5($"id".cast("string")).as("h"), $"id".as("v"))
+    val got = df.agg(graft.functions.QuantileSketchAgg.qsketch(
+        spark, $"h", $"v", 16).as("s")).head()
+      .getSeq[org.apache.spark.sql.Row](0).map(x => (x.getString(0), x.getLong(1)))
+    val want = df.orderBy($"h").limit(16).collect().toSeq
+      .map(r => (r.getString(0), r.getLong(1)))
+    assert(got === want)
+  }
+
   test("plan pin: exchange carries O(tasks × groups) sketches, not the multiset") {
     val ev = graft.sources.Tables.events(spark, Sf)
       .filter(col("value").isNotNull)

@@ -12,7 +12,8 @@ import graft.weather.{WeatherQueries, WeatherZServe}
   *     re-resolves the SAME committed generation from disk — no gold
   *     re-land (landWrites unchanged) and no recluster (same
   *     (root, gen)) — and the heartbeat still serves; the serve
-  *     relations are rebuilt from disk too, over the same generations. */
+  *     relation is rebuilt from disk too, over the same generation of
+  *     the same unified layout. */
 class WeatherGoldDurableSpec extends SparkSpec {
 
   test("a fresh JVM re-arms the gold serve from the durable root: " +
@@ -27,6 +28,8 @@ class WeatherGoldDurableSpec extends SparkSpec {
       s"the root must not be a per-JVM temp dir, got $r1")
     assert(r1.contains("graft_wx_gold"),
       s"the root must be the durable shared location, got $r1")
+    assert(served0 === Some((r1, g1)),
+      "the serve relation must read the unified layout's generation")
     // fresh-JVM simulation: drop every in-memory memo the resolution
     // could ride; only the durable on-disk state remains
     WeatherQueries.clear()

@@ -4,14 +4,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.weather.{WeatherPipeline, WeatherQueries, WeatherZServe}
-import graft.plans.ZoneMapFileIndex
+import graft.plans.{StringZone, ZoneMapFileIndex}
 
-/** The weather serve path over the z-clustered gold layouts (one per
-  * data_type). Pins:
+/** The weather serve path over the z-clustered gold layout (type-pure
+  * per file: every file's data_type zone is single-valued). Pins:
   * (1) q27's (postal, time-window) predicate opens files_opened ≪
-  *     files_total through the FileIndex — the reference's composite
-  *     B-tree serve path (`sql/schema.sql:278-305`) as zone skipping —
-  *     and the forecast layout is refuted entirely: not even scanned;
+  *     observation files through the FileIndex — the reference's
+  *     composite B-tree serve path (`sql/schema.sql:278-305`) as zone
+  *     skipping — and every forecast file is refuted: the scan keeps
+  *     only observation files;
   * (2) q177's postal PREFIX pushes as StartsWith and prunes;
   * (3) the INDEX-SERVED latest snapshots (q24/q25: global max taken
   *     from the timestamp zones and pushed as a literal — the
@@ -24,10 +25,12 @@ import graft.plans.ZoneMapFileIndex
   *     observations, latest forecasts) launches exactly ONE Spark job,
   *     its query: no per-call schema inference, no range-sort jobs;
   * (6) a warm request reuses the held relation (one source stamp, no
-  *     rebuild), and history/horizon plan ONE scan, over their own
-  *     type's layout;
+  *     rebuild), and every endpoint plans ONE scan whose kept files
+  *     are all of its own data_type;
   * (7) a corpus changed in place is served from its new landing's
-  *     generation, and each session gets its own relation.
+  *     generation, and each session gets its own relation;
+  * (8) the prewarm builds exactly two gold layouts: the serve layout
+  *     (16 files per type) and the daily rollup's.
   * Files opened are read from each query's own executed plan (the scan's
   * `numFiles` metric), not from the shared indexes' last-listing
   * counters, which every request over the held relation overwrites. */
@@ -47,32 +50,55 @@ class WeatherZServeSpec extends SparkSpec {
   private def opened(df: DataFrame, idx: ZoneMapFileIndex): Long =
     zoneScans(df).collect { case (i, n) if i eq idx => n }.sum
 
+  private def typeZone(which: String) = Some(StringZone(which, which, 0))
+
+  /** Files of the layout behind `idx` whose data_type is `which`. */
+  private def typeFiles(idx: ZoneMapFileIndex, which: String): Int =
+    idx.currentEntries.count(_.cols.get("data_type") == typeZone(which))
+
+  /** True when `df`'s plan scans only through zone-mapped indexes and
+    * every file each scan keeps is of data_type `which`: the scan's
+    * index re-listed with that scan's own pushed data filters, each
+    * kept file looked up in the index's zone map by path. */
+  private def keepsOnly(df: DataFrame, which: String): Boolean = {
+    val scans = fileScans(df.queryExecution.executedPlan)
+    scans.nonEmpty && scans.forall { scan =>
+      scan.relation.location match {
+        case idx: ZoneMapFileIndex =>
+          val zones = idx.currentEntries
+            .map(e => e.status.getPath -> e.cols.get("data_type")).toMap
+          val kept = idx.listFiles(Nil, scan.dataFilters)
+            .flatMap(_.files).map(f => zones(f.getPath))
+          kept.nonEmpty && kept.forall(_ == typeZone(which))
+        case _ => false
+      }
+    }
+  }
+
   test("q27 history rides the zone-mapped relation: postal + window " +
       "prune most files and the forecast layout is refuted entirely; " +
       "rows identical to the in-memory gold") {
-    val (zdf, idxes) = WeatherZServe.zGoldWithIndexes(spark, dir)
+    val (zdf, idx) = WeatherZServe.zGoldWithIndex(spark, dir)
     val served = WeatherPipeline.history(zdf, "10011", 72, 24)
       .orderBy(col("timestamp"))
     val zRows = served.collect().toSeq
-    val Seq(obsIdx, fcIdx) = idxes
     assert(zRows.nonEmpty, "the fixture postal must have history rows")
     val memRows = WeatherPipeline.history(
         WeatherQueries.goldUnified(spark, dir), "10011", 72, 24)
       .orderBy(col("timestamp")).collect().toSeq
     assert(zRows === memRows,
       "the z-served history must equal the pipeline-served history")
-    val total = obsIdx.currentEntries.size
-    assert(opened(served, obsIdx) < total / 2,
-      s"one postal × 72h must prune most of the obs layout " +
-        s"(opened ${opened(served, obsIdx)} of $total)")
-    assert(zoneScans(served).nonEmpty &&
-      zoneScans(served).forall(_._1 ne fcIdx),
-      "an observation-only query must not scan the forecast layout")
+    val total = typeFiles(idx, "observation")
+    assert(opened(served, idx) < total / 2,
+      s"one postal × 72h must prune most of the observation files " +
+        s"(opened ${opened(served, idx)} of $total)")
+    assert(keepsOnly(served, "observation"),
+      "an observation-only query must keep no forecast file")
   }
 
   test("q177 region rollup: the postal PREFIX pushes as StartsWith, " +
       "prunes files, and equals the in-memory computation") {
-    val (zdf, idxes) = WeatherZServe.zGoldWithIndexes(spark, dir)
+    val (zdf, idx) = WeatherZServe.zGoldWithIndex(spark, dir)
     def rollup(df: org.apache.spark.sql.DataFrame) = df
       .filter(col("data_type") === "observation" &&
         col("postal_code").startsWith("1001") &&
@@ -86,14 +112,13 @@ class WeatherZServeSpec extends SparkSpec {
       .orderBy(col("postal_code"))
     val zq = rollup(zdf)
     val zRows = zq.collect().toSeq
-    val obsIdx = idxes.head
     assert(zRows.nonEmpty)
     assert(zRows === rollup(WeatherQueries.goldUnified(spark, dir))
       .collect().toSeq)
-    val total = obsIdx.currentEntries.size
-    assert(opened(zq, obsIdx) < total,
-      s"the 1001x prefix + 72h window must refute at least some files " +
-        s"(opened ${opened(zq, obsIdx)} of $total)")
+    val total = typeFiles(idx, "observation")
+    assert(opened(zq, idx) < total,
+      s"the 1001x prefix + 72h window must refute at least some " +
+        s"observation files (opened ${opened(zq, idx)} of $total)")
   }
 
   test("q179 gold stats heartbeat is metadata-served: no file scan, " +
@@ -132,7 +157,7 @@ class WeatherZServeSpec extends SparkSpec {
       .orderBy(col("postal_code")).collect().toSeq
     assert(zObs.nonEmpty && zObs === mObs,
       "the index-served latest observations must equal the two-pass view")
-    val obsTotal = obsIdx.currentEntries.size
+    val obsTotal = typeFiles(obsIdx, "observation")
     assert(opened(obsQ, obsIdx) < obsTotal / 2,
       s"the max-timestamp literal must open a strict minority of " +
         s"files (${opened(obsQ, obsIdx)} of $obsTotal)")
@@ -144,36 +169,35 @@ class WeatherZServeSpec extends SparkSpec {
       .orderBy(col("postal_code"), col("target_time")).collect().toSeq
     assert(zFc.nonEmpty && zFc === mFc,
       "the index-served latest forecasts must equal the two-pass view")
-    val fcTotal = fcIdx.currentEntries.size
+    val fcTotal = typeFiles(fcIdx, "forecast")
     assert(opened(fcQ, fcIdx) < fcTotal,
-      s"the fc layout clusters on the ISSUE axis, so the max-issue " +
-        s"literal must refute at least some files " +
+      s"the forecast files cluster on the ISSUE axis, so the max-issue " +
+        s"literal must refute at least some of them " +
         s"(${opened(fcQ, fcIdx)} of $fcTotal)")
   }
 
   /** The four API endpoints as (name, a fresh request over the
     * z-laid-out gold, the same endpoint over plain gold, the data_type
-    * whose layout alone its plan may scan — pinned for the two requests
-    * over the unified relation). */
+    * whose files alone its scan may keep). */
   private def endpoints(): Seq[(String, () => DataFrame, DataFrame,
-      Option[String])] = {
+      String)] = {
     val plain = WeatherQueries.goldUnified(spark, dir)
     val from = lit("2024-01-28 00:00:00").cast("timestamp")
     Seq(
       ("history", () => WeatherPipeline.history(
           WeatherZServe.zGold(spark, dir), "10011", 72, 24),
         WeatherPipeline.history(plain, "10011", 72, 24),
-        Some("observation")),
+        "observation"),
       ("horizon", () => WeatherPipeline.forecastHorizon(
           WeatherZServe.zGold(spark, dir), "10011", from, 48),
         WeatherPipeline.forecastHorizon(plain, "10011", from, 48),
-        Some("forecast")),
+        "forecast"),
       ("latestObs", () => WeatherQueries.latestObs(spark, dir),
         WeatherPipeline.latestObservations(plain)
-          .orderBy(col("postal_code")), None),
+          .orderBy(col("postal_code")), "observation"),
       ("latestFc", () => WeatherQueries.latestFc(spark, dir),
         WeatherPipeline.latestForecasts(plain)
-          .orderBy(col("postal_code"), col("target_time")), None))
+          .orderBy(col("postal_code"), col("target_time")), "forecast"))
   }
 
   test("a warm API request launches exactly one Spark job and returns " +
@@ -191,10 +215,10 @@ class WeatherZServeSpec extends SparkSpec {
   test("a warm request reuses the held relation: one source stamp, no " +
       "rebuild; history and horizon plan one scan, over their own " +
       "type's layout") {
-    endpoints().foreach { case (name, served, truth, layout) =>
+    endpoints().foreach { case (name, served, truth, which) =>
       served().collect() // warm
       val want = truth.collect().toSeq
-      val Seq(obsIdx, fcIdx) = WeatherZServe.zGoldWithIndexes(spark, dir)._2
+      val idx = WeatherZServe.zGoldWithIndex(spark, dir)._2
       val (p0, b0) = (WeatherZServe.stampProbes.get(),
         WeatherZServe.servedBuilds.get())
       val df = served()
@@ -205,13 +229,12 @@ class WeatherZServeSpec extends SparkSpec {
         s"$name: a warm request must not build a new relation")
       assert(rows.nonEmpty && rows === want,
         s"$name: the served rows must equal the endpoint over plain gold")
-      layout.foreach { which =>
-        val idx = if (which == "observation") obsIdx else fcIdx
-        val scans = fileScans(df.queryExecution.executedPlan)
-        assert(scans.size === 1 && (scans.head.relation.location eq idx),
-          s"$name: the plan must hold exactly one scan, over the " +
-            s"$which layout (got ${scans.map(_.relation.location)})")
-      }
+      val scans = fileScans(df.queryExecution.executedPlan)
+      assert(scans.size === 1 && (scans.head.relation.location eq idx),
+        s"$name: the plan must hold exactly one scan, over the gold " +
+          s"layout (got ${scans.map(_.relation.location)})")
+      assert(keepsOnly(df, which),
+        s"$name: the scan must keep only $which files")
     }
   }
 
@@ -232,8 +255,7 @@ class WeatherZServeSpec extends SparkSpec {
       try {
         val before = WeatherQueries.latestObs(spark, corpus).collect().toSeq
         assert(before.nonEmpty && before === latestObsPlain())
-        val Some(((_, obsGen0), (_, fcGen0))) =
-          WeatherZServe.servedGenerations(spark, corpus)
+        val Some((_, gen0)) = WeatherZServe.servedGenerations(spark, corpus)
 
         // a different feed: the corpus minus its last day, written by
         // Spark over the copy's events.parquet
@@ -251,10 +273,9 @@ class WeatherZServeSpec extends SparkSpec {
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
 
         val after = WeatherQueries.latestObs(spark, corpus).collect().toSeq
-        val Some(((_, obsGen1), (_, fcGen1))) =
-          WeatherZServe.servedGenerations(spark, corpus)
-        assert(obsGen1 > obsGen0 && fcGen1 > fcGen0,
-          "the changed corpus must be served from new layout generations")
+        val Some((_, gen1)) = WeatherZServe.servedGenerations(spark, corpus)
+        assert(gen1 > gen0,
+          "the changed corpus must be served from a new layout generation")
         assert(after.nonEmpty && after != before,
           "dropping the last day must move the latest observations")
         assert(after === latestObsPlain(),
@@ -273,6 +294,34 @@ class WeatherZServeSpec extends SparkSpec {
           assert(history(z).collect().toSeq === zRows)
         }
       } finally spark.conf.unset("spark.graft.weather.goldDir")
+    }
+  }
+
+  test("the prewarm over a fresh gold dir builds exactly two layouts: " +
+      "the type-pure serve layout and the daily rollup's") {
+    val goldDir = TempDirs.create("wx_serve_prewarm_gold_")
+    def names(p: java.nio.file.Path): Seq[String] = {
+      val ls = java.nio.file.Files.list(p)
+      try ls.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path]
+        .getFileName.toString).sorted
+      finally ls.close()
+    }
+    // a session of its own carries the gold dir, so no other suite's
+    // weather call lands under it
+    withExtSession { ext =>
+      ext.conf.set("spark.graft.weather.goldDir", goldDir)
+      WeatherZServe.prewarm(ext, dir)
+      val Seq(corpusGold) = names(java.nio.file.Paths.get(goldDir))
+      assert(names(java.nio.file.Paths.get(goldDir, corpusGold))
+        .filter(_.startsWith("z_")) === Seq("z_daily", "z_gold"),
+        "the prewarm must leave exactly two layout roots")
+      val idx = WeatherZServe.zGoldWithIndex(ext, dir)._2
+      val perType = idx.currentEntries.groupBy(_.cols.get("data_type"))
+        .map { case (z, es) => z -> es.size }
+      assert(perType.keySet === Set(typeZone("observation"),
+        typeZone("forecast")) && perType.values.forall(_ <= 16),
+        s"every serve-layout file must hold one data_type, at most 16 " +
+          s"files per type (got $perType)")
     }
   }
 }
