@@ -144,10 +144,10 @@ object Bench {
         System.err.println(s"[bench] prewarm_zindex_window ${fmt(prewarmZ)}")
       }
     }
-    // the two weather-gold layouts (the type-pure serve layout behind
-    // q24/q25/q27/q177/q179/q182/q183, the daily one behind q187/q188),
-    // same convention — the landing also forces the gold build, so the
-    // cost is priced here instead of on whichever serve query runs first
+    // the one weather-gold layout (behind q24/q25/q27/q177/q179/q182/
+    // q183/q187/q188), same convention — the landing also forces the
+    // gold build, so the cost is priced here instead of on whichever
+    // serve query runs first
     var prewarmWxZ = 0.0
     if (Seq("q24_weather_latest_obs", "q25_weather_latest_fc",
         "q27_weather_history", "q177_weather_region_history",

@@ -59,9 +59,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // alias-aware star planning: a multi-fact star over the typed
     // event tables joins its cheapest edge first using the EXACT
     // per-(dim, fact) calibrated aliases (no-op until aliases are
-    // registered; spark.graft.stats.starReorder=false disables). Runs
-    // AFTER Catalyst's own reorder batch, so with CBO on the exact
-    // numbers have the last word.
+    // registered). Runs AFTER Catalyst's own reorder batch, so with CBO
+    // on the exact numbers have the last word.
     ext.injectOptimizerRule(_ => graft.plans.StarAliasReorder)
   }
 }

@@ -98,28 +98,43 @@ object Layout {
     * so this is the one justified RDD drop-down: an EXACT partitioner
     * over the driver-collected distinct group list (O(groups) driver
     * memory — days × types, never rows) in a single shuffle.
-    * `subSplits` > 1 spreads each group over that many files (same
-    * purity, row-hash spread) — the production knob when one group's
-    * volume exceeds a sane file size. */
+    *
+    * The `nFiles` budget splits each group into k = max(1, nFiles /
+    * groups) contiguous ranges of `rangeCol` (same purity): the k − 1
+    * cut points are taken from the sorted distinct non-null values of
+    * `rangeCol` (one driver collect, O(distinct values)) and shared by
+    * every group, nulls going to the first range. Each file then
+    * carries a disjoint `rangeCol` interval inside its group, so a
+    * predicate on that column prunes within the group. */
   def partitionPureBy(df: DataFrame, keys: Seq[String],
-      subSplits: Int = 1): DataFrame = {
+      rangeCol: String, nFiles: Int): DataFrame = {
     val spark = df.sparkSession
-    val schema = df.schema
     val groups: Map[Seq[Any], Int] = df.select(keys.map(col): _*)
       .distinct().collect().map(_.toSeq).zipWithIndex.toMap
     if (groups.isEmpty) return df.repartition(1)
+    val k = math.max(1, nFiles / groups.size)
+    val cuts: Seq[Any] = if (k == 1) Nil else {
+      val c = col(rangeCol)
+      val vs = df.select(c).filter(c.isNotNull).distinct().orderBy(c)
+        .collect().map(_.get(0))
+      (1 until k).map(i => i * vs.length / k).filter(_ > 0).distinct
+        .map(vs(_))
+    }
+    // the range index: how many cut points the row's value reaches
+    val withRange = df.withColumn("__range", cuts.foldLeft(lit(0))((b, v) =>
+      b + when(col(rangeCol) >= lit(v), 1).otherwise(0)))
+    val schema = withRange.schema
     val keyIdx = keys.map(schema.fieldIndex)
-    val n = groups.size * subSplits
+    val rangeIdx = schema.fieldIndex("__range")
+    val n = groups.size * k
     val part = new org.apache.spark.Partitioner {
       override def numPartitions: Int = n
       override def getPartition(key: Any): Int = key.asInstanceOf[Int]
     }
-    val splits = subSplits // avoid serializing `this`
-    val rdd = df.rdd
-      .map(r => (groups(keyIdx.map(r.get)) * splits +
-        (if (splits == 1) 0 else math.floorMod(r.hashCode, splits)), r))
+    val rdd = withRange.rdd
+      .map(r => (groups(keyIdx.map(r.get)) * k + r.getInt(rangeIdx), r))
       .partitionBy(part).values
-    spark.createDataFrame(rdd, schema)
+    spark.createDataFrame(rdd, schema).drop("__range")
   }
 
   /** q99 — the z-order bucket→bounds map over lineitem (l_partkey ×

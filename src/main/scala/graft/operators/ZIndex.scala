@@ -626,14 +626,6 @@ object ZIndex {
     case _ => true
   }
 
-  /** Measurement-arm knob shared by q172 AND q174: `mode` wins;
-    * the legacy boolean `spark.graft.zindex.prune=false` maps to
-    * `all`. */
-  private def zMode(spark: SparkSession): String =
-    spark.conf.getOption("spark.graft.zindex.mode")
-      .getOrElse(if (spark.conf.getOption("spark.graft.zindex.prune")
-        .contains("false")) "all" else "pruned")
-
   /** The 2-D query box, derived from the zone map's own global bounds
     * — decile 2 of BOTH ranges, ~1% of the z-space. The SAME decile on
     * both dimensions deliberately: replicated corpora (ScaleUp offsets
@@ -651,35 +643,19 @@ object ZIndex {
   /** q172 — the box aggregate over the pruned scan: consult the zone
     * map (KB, driver, memoized per committed generation), open ONLY
     * the overlapping files, apply the residual predicate inside the
-    * scan.
-    *
-    * Measurement arms (`spark.graft.zindex.mode`): `pruned` (default)
-    * consults the zone map; `all` opens every layout file (the
-    * file-skipping delta in isolation — small on a local SSD, where
-    * the z-sorted files' tight row-group stats let parquet skip
-    * almost everything from the footers anyway; at object-store scale
-    * the never-opened files are the win); `raw` computes the identical
-    * result straight off the UNCLUSTERED corpus table — the cost a
-    * user without the layout pays: random row order means wide
-    * row-group bounds, so pushdown cannot skip and the scan reads the
-    * whole table. The `raw` arm derives the box from the table's own
-    * bounds (one min/max pass), exactly the oracle's arithmetic. */
+    * scan. */
   def q172ZorderPrune(spark: SparkSession, dir: String): DataFrame = {
-    val mode = zMode(spark)
-    if (mode == "raw") return q172Raw(spark, dir)
     val entries = resolveEntries(spark, dir, Lineitem)
     zFilesTotal.set(entries.length)
     val (plo, phi) = globalLong(spark, dir, Lineitem, entries, "l_partkey")
     val (olo, ohi) = globalLong(spark, dir, Lineitem, entries, "l_orderkey")
     val (xlo, xhi, ylo, yhi) = box(plo, phi, olo, ohi)
-    val keep = entries.filter(e => mode != "pruned" ||
-      (overlapLong(e, "l_partkey", xlo, xhi) &&
-        overlapLong(e, "l_orderkey", ylo, yhi)))
+    val keep = entries.filter(e =>
+      overlapLong(e, "l_partkey", xlo, xhi) &&
+        overlapLong(e, "l_orderkey", ylo, yhi))
     zFilesRead.set(keep.length)
-    // attribution line (the RunOne/Bench stderr convention): wall-time
-    // parity between pruned and all on a warm local disk is expected —
-    // THIS is the number that scales
-    System.err.println(s"[zindex] mode=$mode files_read=${keep.length} " +
+    // attribution line (the RunOne/Bench stderr convention)
+    System.err.println(s"[zindex] files_read=${keep.length} " +
       s"files_total=${entries.length}")
     val boxed =
       if (keep.isEmpty)
@@ -701,19 +677,6 @@ object ZIndex {
         countDistinct(col("l_suppkey")).as("n_supp"))
       .orderBy(col("l_returnflag"))
 
-  /** The `raw` measurement arm: the oracle's computation verbatim on
-    * the unclustered corpus table — bounds pass + filtered scan, no
-    * layout, no zone map (see [[q172ZorderPrune]]). */
-  private def q172Raw(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val b = li.agg(min(col("l_partkey")), max(col("l_partkey")),
-      min(col("l_orderkey")), max(col("l_orderkey"))).collect()(0)
-    val (xlo, xhi, ylo, yhi) =
-      box(b.getLong(0), b.getLong(1), b.getLong(2), b.getLong(3))
-    System.err.println(s"[zindex] mode=raw (unclustered scan)")
-    boxAgg(li, xlo, xhi, ylo, yhi)
-  }
-
   /** q174's one-dimensional range — decile 3 of the ORDERKEY range,
     * no partkey predicate at all. */
   private[graft] def band(olo: Long, ohi: Long): (Long, Long) =
@@ -733,24 +696,15 @@ object ZIndex {
     * ~1-strip of files whose [omin, omax] overlap it (ZIndexSpec pins
     * the strict subset; a 10% band keeps ~⅛–¼ of the grid vs ~1/64
     * for q172's 2-D cell — the classic z-order strip-vs-cell
-    * geometry). Same `raw` arm convention for the no-layout baseline. */
+    * geometry). */
   def q174ZorderOnedim(spark: SparkSession, dir: String): DataFrame = {
-    val mode = zMode(spark)
-    if (mode == "raw") {
-      val li = Tables.lineitem(spark, dir)
-      val b = li.agg(min(col("l_orderkey")), max(col("l_orderkey"))).collect()(0)
-      val (ylo, yhi) = band(b.getLong(0), b.getLong(1))
-      System.err.println(s"[zindex] q174 mode=raw (unclustered scan)")
-      return bandAgg(li, ylo, yhi)
-    }
     val entries = resolveEntries(spark, dir, Lineitem)
     zFilesTotal.set(entries.length)
     val (olo, ohi) = globalLong(spark, dir, Lineitem, entries, "l_orderkey")
     val (ylo, yhi) = band(olo, ohi)
-    val keep = entries.filter(e => mode != "pruned" ||
-      overlapLong(e, "l_orderkey", ylo, yhi))
+    val keep = entries.filter(e => overlapLong(e, "l_orderkey", ylo, yhi))
     zFilesRead.set(keep.length)
-    System.err.println(s"[zindex] q174 mode=$mode files_read=${keep.length} " +
+    System.err.println(s"[zindex] q174 files_read=${keep.length} " +
       s"files_total=${entries.length}")
     val banded =
       if (keep.isEmpty)

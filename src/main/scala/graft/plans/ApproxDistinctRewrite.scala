@@ -13,9 +13,8 @@ import graft.functions.KmvSketch
   * {{{ spark.graft.approx.countDistinct = true }}}
   *
   * every single-argument `COUNT(DISTINCT e)` in an aggregation is
-  * rewritten to the KMV bottom-k estimate ([[KmvSketch]], k from
-  * `spark.graft.approx.countDistinctK`, default 64) — the opt-in
-  * accuracy-for-cost trade every warehouse exposes (BigQuery
+  * rewritten to the KMV bottom-k estimate ([[KmvSketch]], k = 64) —
+  * the opt-in accuracy-for-cost trade every warehouse exposes (BigQuery
   * `APPROX_COUNT_DISTINCT`, Snowflake `APPROX_COUNT_DISTINCT`,
   * Trino `approx_distinct`), here as a Catalyst rule so EXISTING SQL
   * and DataFrame code switches modes by conf, with no rewrite of the
@@ -41,21 +40,16 @@ import graft.functions.KmvSketch
 object ApproxDistinctRewrite extends Rule[LogicalPlan] {
 
   private val Flag = "spark.graft.approx.countDistinct"
-  private val KFlag = "spark.graft.approx.countDistinctK"
 
   private def enabled: Boolean =
     conf.getConfString(Flag, "false").equalsIgnoreCase("true")
 
-  private def k: Int = {
-    val v = conf.getConfString(KFlag, "64")
-    val n = try v.toInt catch { case _: NumberFormatException => 64 }
-    if (n > 0) n else 64
-  }
+  private val K = 64
 
   /** (k−1) / (first-48-bits(hk) / 2^48), exact count below saturation —
     * the q139 estimator as a raw Catalyst tree over the sketch struct.
     */
-  private def estimate(sketch: Expression, kk: Int): Expression = {
+  private def estimate(sketch: Expression): Expression = {
     val nKept = GetStructField(sketch, 0, Some("n_kept"))
     val hk = GetStructField(sketch, 1, Some("hk"))
     val prefix = Cast(Conv(Substring(hk, Literal(1), Literal(12)),
@@ -65,9 +59,9 @@ object ApproxDistinctRewrite extends Rule[LogicalPlan] {
     // prefix to 1, mirrored verbatim in every SQL oracle estimator
     val guarded = Greatest(Seq(prefix, Literal(1L)))
     val uk = Divide(Cast(guarded, DoubleType), Literal(281474976710656.0)) // 16^12
-    val est = If(LessThan(nKept, Literal(kk, IntegerType)),
+    val est = If(LessThan(nKept, Literal(K, IntegerType)),
       Cast(nKept, DoubleType),
-      Divide(Literal((kk - 1).toDouble), uk))
+      Divide(Literal((K - 1).toDouble), uk))
     Cast(Round(est, Literal(0)), LongType)
   }
 
@@ -87,7 +81,6 @@ object ApproxDistinctRewrite extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!enabled) return plan
-    val kk = k
     plan transform {
       case agg: Aggregate =>
         agg.transformExpressions {
@@ -96,9 +89,9 @@ object ApproxDistinctRewrite extends Rule[LogicalPlan] {
             val hash = Md5(Cast(Cast(normalized(e), StringType),
               org.apache.spark.sql.types.BinaryType))
             val sketchAgg = AggregateExpression(
-              KmvSketch(hash, kk), Complete, isDistinct = false, filter,
+              KmvSketch(hash, K), Complete, isDistinct = false, filter,
               NamedExpression.newExprId)
-            estimate(sketchAgg, kk)
+            estimate(sketchAgg)
           case AggregateExpression(Count(es), _, true, filter, _)
               if es.length > 1 && es.forall(_.deterministic) =>
             // COUNT(DISTINCT a, b, …) counts distinct tuples over rows
@@ -118,9 +111,9 @@ object ApproxDistinctRewrite extends Rule[LogicalPlan] {
             val hash = If(anyNull, Literal.create(null, StringType),
               Md5(Cast(Concat(framed), org.apache.spark.sql.types.BinaryType)))
             val sketchAgg = AggregateExpression(
-              KmvSketch(hash, kk), Complete, isDistinct = false, filter,
+              KmvSketch(hash, K), Complete, isDistinct = false, filter,
               NamedExpression.newExprId)
-            estimate(sketchAgg, kk)
+            estimate(sketchAgg)
         }
     }
   }

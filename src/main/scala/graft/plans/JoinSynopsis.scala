@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   *    ANALYZE-stats CBO order on the q-chain CboReorderSpec uses;
   *  - [[SynopsisCatalog]] + [[SketchBroadcastHint]] → an automatic
   *    broadcast hint when a side's synopsis-estimated cardinality is
-  *    under `spark.graft.synopsis.broadcastMaxRows`;
+  *    under its 100000-row cap;
   *  - [[SynopsisStats]] → the synopsis written as CATALOG statistics
   *    (rowCount / sizeInBytes / key NDV, with a calibrated form that
   *    encodes frequency skew), so Spark's OWN join-reorder and

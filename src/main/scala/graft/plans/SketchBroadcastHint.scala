@@ -9,12 +9,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * {{{ spark.graft.synopsis.autoBroadcast = true }}}
   *
   * any join side whose [[SynopsisCatalog]]-registered sketch-estimated
-  * cardinality is at most `spark.graft.synopsis.broadcastMaxRows`
-  * (default 100000) gets a BROADCAST hint — the same decision Spark
-  * makes from `sizeInBytes` statistics, here driven by the KMV
-  * synopsis, so it fires even where file-size stats are useless
-  * (post-filter/post-aggregate subtrees, fresh temp views with no
-  * ANALYZE). Injected at post-hoc resolution: SubqueryAlias nodes (the
+  * cardinality is at most 100000 rows gets a BROADCAST hint — the
+  * same decision Spark makes from `sizeInBytes` statistics, here
+  * driven by the KMV synopsis, so it fires even where file-size stats
+  * are useless (post-filter/post-aggregate subtrees, fresh temp views
+  * with no ANALYZE). Injected at post-hoc resolution: SubqueryAlias nodes (the
   * names the catalog keys on) are still present in the analyzed plan —
   * the optimizer erases them before any optimizer-phase rule could
   * look. Spark's own EliminateResolvedHint then folds the injected
@@ -41,14 +40,10 @@ object SketchBroadcastHint extends Rule[LogicalPlan] {
     * short common alias attach a BROADCAST hint to an unrelated large
     * relation that reuses it anywhere in the session. */
   private val Flag = "spark.graft.synopsis.autoBroadcast"
-  private val MaxRowsFlag = "spark.graft.synopsis.broadcastMaxRows"
 
   private def enabled: Boolean =
     conf.getConfString(Flag, "false").equalsIgnoreCase("true")
-  private def maxRows: Long = {
-    val v = conf.getConfString(MaxRowsFlag, "100000")
-    try v.toLong catch { case _: NumberFormatException => 100000L }
-  }
+  private val MaxRows = 100000L
 
   /** Registered estimate for a side, by the addressing contract above:
     * only the INNERMOST alias of the chain — the one directly wrapping
@@ -91,12 +86,11 @@ object SketchBroadcastHint extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!enabled) return plan
-    val cap = maxRows
     plan transformUp {
       case j @ Join(l, r, _, _, JoinHint.NONE)
           if !alreadyHinted(l) && !alreadyHinted(r) =>
         def estOf(side: LogicalPlan): Option[Long] =
-          lookupAlias(side).filter(_ <= cap)
+          lookupAlias(side).filter(_ <= MaxRows)
         (estOf(l), estOf(r)) match {
           case (Some(le), Some(re)) =>
             if (re <= le) j.copy(right = ResolvedHint(r, HintInfo(strategy = Some(BROADCAST))))

@@ -71,9 +71,9 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   * foreign fact's skew can be orders of magnitude over the true edge,
   * and at cluster scale that is shuffled terabytes, not estimate
   * cosmetics. Armed via [[graft.GraftExtensions]] or per-session
-  * `extraOptimizations`; `spark.graft.stats.starReorder=false`
-  * disables; a no-op unless aliases are registered (the q170 MAX
-  * behavior is unchanged for consumers that never registered them). */
+  * `extraOptimizations`; a no-op unless aliases are registered (the
+  * q170 MAX behavior is unchanged for consumers that never registered
+  * them). */
 object StarAliasReorder extends Rule[LogicalPlan] with PredicateHelper {
 
   private val TblRe = "graft_ev_([a-z0-9_]+)_([0-9a-f]{8})".r
@@ -249,11 +249,8 @@ object StarAliasReorder extends Rule[LogicalPlan] with PredicateHelper {
     Some(Project(j.output, body))
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (conf.getConfString("spark.graft.stats.starReorder", "true")
-        == "false") return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformDown {
       case j @ Join(_, _, Inner, _, _) => rewrite(j).getOrElse(j)
     }
-  }
 }

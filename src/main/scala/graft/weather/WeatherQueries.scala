@@ -85,7 +85,7 @@ object WeatherQueries {
 
   /** The reference's single `weather_data_gold` table (observations +
     * forecasts, discriminated by data_type) — the frame
-    * [[WeatherZServe]] lands for the z-clustered serve layout. */
+    * [[WeatherZServe]] lands for the gold layout. */
   private[weather] def goldUnified(g: Generation): DataFrame =
     goldObs(g).unionByName(goldFc(g))
 
@@ -114,7 +114,7 @@ object WeatherQueries {
       .orderBy(col("postal_code"), col("forecast_issue_time"), col("forecast_target_time"))
 
   // The API serve queries (latest snapshots + history + region) read
-  // gold through the z-clustered FileIndex relations (WeatherZServe):
+  // gold through the zone-mapped FileIndex relation (WeatherZServe):
   // the scan is the reference's B-tree serve path re-expressed as
   // zone-map skipping — the latest snapshots additionally take their
   // global max FROM the zone map and push it as a literal, so the

@@ -49,8 +49,8 @@ object WeatherStats {
     p.getAbsolutePath
   }
 
-  /** Stamp-addressed land dirs already written in this JVM. */
-  private val landed = scala.collection.mutable.Set.empty[String]
+  /** Guards the catalog DDL + statistics injection of [[dims]]. */
+  private val dimsLock = new Object
 
   /** (shared catalog, corpus dir) → source stamp at last registration:
     * a hit means tables exist, point at this stamp's land dir, and
@@ -86,7 +86,7 @@ object WeatherStats {
     * injected synopsis statistics; memoized on the source stamp —
     * see object doc. */
   def dims(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    landed.synchronized {
+    dimsLock.synchronized {
       val (stTbl, pcTbl) = dimTableNames(d)
       val stamp =
         sourceStamp(s, d, Seq("customer.parquet", "nation.parquet"))
@@ -95,16 +95,15 @@ object WeatherStats {
           s.catalog.tableExists(stTbl) && s.catalog.tableExists(pcTbl))
         return (s.table(stTbl), s.table(pcTbl))
       val root = s"$dimRoot/${id8(d)}/${id8(stamp.mkString("\n--\n"))}"
-      if (!landed(root)) {
-        // stamp-addressed: a regenerated corpus lands to a NEW dir (the
-        // old one stays — a concurrent session's analyzed frames may
-        // still read it); re-landing the SAME stamp is a no-op
+      // stamp-addressed: a regenerated corpus lands to a NEW dir (the
+      // old one stays — a concurrent session's analyzed frames may
+      // still read it); a committed landing is never re-landed
+      graft.util.Generations.landOnce(s, s"$root/stations")(
         WeatherSynth.stations(s, d).coalesce(1)
-          .write.mode("overwrite").parquet(s"$root/stations")
+          .write.mode("overwrite").parquet(s"$root/stations"))
+      graft.util.Generations.landOnce(s, s"$root/postal")(
         WeatherSynth.postalCodes(s, d).coalesce(1)
-          .write.mode("overwrite").parquet(s"$root/postal")
-        landed += root
-      }
+          .write.mode("overwrite").parquet(s"$root/postal"))
       // catalog entries are shared-catalog state, but a table created
       // against an OLDER stamp points at the superseded land dir —
       // re-point by drop + create (metadata only)

@@ -10,13 +10,13 @@ import graft.util.Generations
 
 /** The weather SERVE path riding the z-skipping layer: gold — the
   * table every API read hits — landed once per corpus as ONE durable
-  * z-clustered layout, type-pure per file (each data_type clusters on
-  * (postal_code, its own time axis) into its own half of the files),
-  * and every serve query (q27 history, the forecast horizon, q24/q25
-  * latest snapshots, q177, q179) reading it through one
-  * [[graft.plans.ZoneMapFileIndex]] relation: a request's data_type
-  * predicate refutes the other type's files, its postal/time
-  * predicates prune within its own type's half.
+  * layout, pure per file on (data_type, day) and range-split on
+  * postal_code inside each group, and every gold reader (q27 history,
+  * the forecast horizon, q24/q25 latest snapshots, q177, and the
+  * metadata-served q179/q182/q183/q187/q188) reading it through one
+  * [[graft.plans.ZoneMapFileIndex]] relation or its catalog face: a
+  * request's data_type predicate refutes the other type's files, its
+  * time and postal predicates the other days' and postal ranges'.
   *
   * This replaces the reference's OWN index surface on its OWN query
   * surface: `sql/schema.sql:278-305` B-tree-indexes gold on
@@ -37,8 +37,8 @@ import graft.util.Generations
   * discipline): a corpus regenerated in place lands fresh gold to a
   * new dir, and the layout's consumed-identity diff sees the swap as
   * a mutation and reclusters. At 100 TB gold is years × country of
-  * hourly rows; the serve path opening ~1/nFiles of it per postal
-  * query is the difference between an API and a batch job. */
+  * hourly rows; the serve path opening a few (day, postal range)
+  * files per query is the difference between an API and a batch job. */
 object WeatherZServe {
 
   /** The gold landing + layout root — DURABLE (r15 verdict #4): a
@@ -46,24 +46,22 @@ object WeatherZServe {
     * default a stable path under the system tmpdir), not a per-JVM
     * temp dir, so the TBLPROPERTIES record a weather z-table carries
     * survives the JVM: a fresh session whose corpus stamp matches
-    * re-arms q182/q183/q187 from the committed layouts on disk —
+    * re-arms q182/q183/q187 from the committed layout on disk —
     * no gold re-land, no recluster (WeatherGoldDurableSpec pins the
     * zero-build re-resolve). Landings are stamp-addressed (corpus
     * regeneration lands to a new subdir) and committed by the parquet
-    * `_SUCCESS` marker ([[Generations.landOnce]]); the z-layouts above
-    * them commit through [[Generations]]. */
+    * `_SUCCESS` marker ([[Generations.landOnce]]); the layout above
+    * them commits through [[Generations]]. */
   private def goldRoot(s: SparkSession): String =
     s.conf.getOption("spark.graft.weather.goldDir")
       .getOrElse(sys.props("java.io.tmpdir") + "/graft_wx_gold")
 
-  // the gold layout contracts are resolvable BY NAME for
+  // the gold layout contract is resolvable BY NAME for
   // TBLPROPERTIES-driven re-arming (ZoneMapScanSwap.arm): a session
   // that sees the q179 catalog table but never called the registration
   // rebuilds the contract from (its own session, the recorded dir)
   graft.plans.ZoneMapScanSwap.registerContract("weather_gold_all",
     (s, d) => goldAllZTable(s, d))
-  graft.plans.ZoneMapScanSwap.registerContract("weather_gold_daily",
-    (s, d) => goldDailyZTable(s, d))
 
   /** Spec observables: gold landings actually WRITTEN in this JVM,
     * source stamps computed and serve relations built. */
@@ -95,7 +93,8 @@ object WeatherZServe {
     *   3. the gold landing's path lock ([[Generations.landOnce]]);
     *   4. the entry's monitor — building one of its frames (builders
     *      nest: goldObs builds stgObs), or retiring it;
-    *   5. the bronze landing's path lock, or WeatherStats.dims' lock.
+    *   5. the bronze landing's path lock, or WeatherStats.dims' lock
+    *      (then its dim landings' path locks).
     * Hits take none of them: the generation map, the frames and the
     * serve relation are read lock-free, and a gold frame finds a
     * committed landing by a marker probe, not under the landing lock. */
@@ -203,76 +202,46 @@ object WeatherZServe {
 
   /** The gold layout — the reference's single `weather_data_gold`
     * table (one discriminated table, B-tree-indexed on (postal_code,
-    * timestamp)) as ONE catalog object, physically type-pure per file:
-    * each data_type z-clusters by the DERIVED pair (numeric postal sort
-    * key, epoch of the time axis ITS serve predicates hit — obs →
-    * target hour for q27's window and q24's max-hour literal, fc →
-    * issue timestamp for q25's max-issue literal) into its half of the
-    * files, and the halves' partitions concatenate, so every written
-    * file carries exactly one data_type. The zone map records the real
-    * postal_code / timestamp / forecast_timestamp / data_type columns
-    * for refutation. A single-valued data_type zone (lo == hi,
-    * nulls == 0) in every file is what lets a request's type predicate
-    * refute the other half, the latest-snapshot maxima be read per
-    * type ([[zoneMax]]), and [[graft.plans.ZoneAggServe]] serve the
-    * grouped and type-filtered aggregates (q179/q182/q183) from
-    * footers. */
-  private def goldAllZTable(s: SparkSession, d: String): ZTable = {
-    def half(df: DataFrame, which: String, tsCol: String, n: Int) =
-      Layout.clusterByZ(
-        df.filter(col("data_type") === which)
-          .withColumn("__zx", col("postal_code").cast("long"))
-          .withColumn("__zy", unix_timestamp(col(tsCol))),
-        "__zx", "__zy", n).drop("__zx", "__zy")
+    * timestamp)) as ONE catalog object that every gold reader shares.
+    * `prep` derives `day` (the target hour's date, recorded in the zone
+    * map like any other column), and [[Layout.partitionPureBy]] writes
+    * every file pure on BOTH (data_type, day), each (type, day) group
+    * split into nFiles / groups contiguous postal_code ranges (7 days →
+    * 14 groups → 2 ranges, 28 files). So:
+    *   - a request's type predicate refutes the other type's files, its
+    *     time window the other days' and its postal predicate the other
+    *     ranges';
+    *   - the latest-snapshot maxima are read per type ([[zoneMax]]);
+    *   - [[graft.plans.ZoneAggServe]] serves the grouped and filtered
+    *     aggregates (q179/q182/q183/q187/q188) from footers, because
+    *     every file is single-valued on the group keys. */
+  private def goldAllZTable(s: SparkSession, d: String): ZTable =
     // feed/load resolve the landing LAZILY (a source-stamp probe per
-    // feedOf/load call): a registry-held instance (the q179/q182/q183
-    // catalog face) must follow a regenerated corpus to its fresh
-    // stamp-addressed landing instead of pinning the path captured at
-    // registration. Serve requests do not pay it per call: they reuse
-    // [[served]]'s relation, built through here once per generation.
+    // feedOf/load call): a registry-held instance (the catalog face)
+    // must follow a regenerated corpus to its fresh stamp-addressed
+    // landing instead of pinning the path captured at registration.
+    // Serve requests do not pay it per call: they reuse [[served]]'s
+    // relation, built through here once per generation.
     ZTable("weather_gold_all",
       _ => landedGold(s, d),
       (s2, _) => s2.read.parquet(landedGold(s2, d)),
       "postal_code", "timestamp", // informational; clusterWith overrides
-      // 16 files per type
       nFiles = 32,
-      clusterWith = Some((df, n) =>
-        half(df, "observation", "timestamp", math.max(1, n / 2))
-          .unionByName(half(df, "forecast", "forecast_timestamp",
-            math.max(1, n - n / 2)))),
-      // the weather layouts live under the JVM's own gold root,
+      clusterWith = Some((df, n) => Layout.partitionPureBy(
+        df, Seq("data_type", "day"), "postal_code", n)),
+      prep = Some(df => df.withColumn("day", to_date(col("timestamp")))),
+      // the weather layout lives under the JVM's own gold root,
       // INDEPENDENT of spark.graft.zindex.dir (a layout landed while a
       // parallel z-suite steered that conf used to resolve into — and
-      // rebuild across — the other suite's temp root). `z_gold`, not the
-      // 16-file `z_all` of older builds: ZIndex keys a generation on its
-      // feed, not on nFiles, so a durable `z_all` would be reused as is
-      rootOverride = Some(s"${goldRoot(s)}/${id8(d)}/z_gold"))
-  }
-
-  /** The DAILY-ROLLUP layout (r15 verdict #3's consumer): unified gold
-    * with a derived `day` column (prep — recorded in the zone map like
-    * any other column), physically partitioned so every file is pure
-    * on BOTH (data_type, day) — [[Layout.partitionPureBy]]'s exact
-    * partitioner, the property hash/range repartitioning cannot
-    * guarantee. That makes the composite group key single-valued per
-    * file, so the daily per-type rollup (q187) folds entirely from
-    * footer statistics. One file per (type, day) here; production
-    * sets `subSplits` by group volume (purity is preserved). */
-  private def goldDailyZTable(s: SparkSession, d: String): ZTable =
-    ZTable("weather_gold_daily",
-      _ => landedGold(s, d),
-      (s2, _) => s2.read.parquet(landedGold(s2, d)),
-      "postal_code", "timestamp", // informational; clusterWith overrides
-      nFiles = 16, // informational; one file per (type, day)
-      clusterWith = Some((df, _) =>
-        graft.operators.Layout.partitionPureBy(
-          df, Seq("data_type", "day"))),
-      prep = Some(df => df.withColumn("day", to_date(col("timestamp")))),
-      rootOverride = Some(s"${goldRoot(s)}/${id8(d)}/z_daily"))
+      // rebuild across — the other suite's temp root). `z_day`, not the
+      // z-ordered `z_gold` of older builds: ZIndex keys a generation on
+      // its feed, not on the clustering, so a durable `z_gold` would be
+      // reused as is
+      rootOverride = Some(s"${goldRoot(s)}/${id8(d)}/z_day"))
 
   /** q187 — the MULTI-KEY grouped metadata serve (r15 verdict #3): the
     * daily layer report — `GROUP BY data_type, day` — over the
-    * (type, day)-pure layout. Every file is single-valued on BOTH
+    * (type, day)-pure gold layout. Every file is single-valued on BOTH
     * keys, so the files partition exactly by the composite group and
     * each (type, day)'s COUNT/MIN/MAX folds from its own footers —
     * zero tasks for the monitoring rollup a time-partitioned gold
@@ -281,7 +250,7 @@ object WeatherZServe {
     * driver oracles it at three scales). */
   def q187GoldDailyRollup(s: SparkSession, d: String): DataFrame = {
     val tbl = graft.operators.ZCatalog.ensureRegistered(
-      s, d, goldDailyZTable(s, d))
+      s, d, goldAllZTable(s, d))
     s.sql(
       s"""SELECT data_type, day, COUNT(*) AS n_rows,
          |  MIN(timestamp) AS min_hour, MAX(timestamp) AS max_hour,
@@ -293,7 +262,7 @@ object WeatherZServe {
   }
 
   /** q188 — the day INVENTORY, metadata-served including
-    * COUNT(DISTINCT): over the (type, day)-pure daily layout, every
+    * COUNT(DISTINCT): over the (type, day)-pure gold layout, every
     * file's `day` zone is a constant, so the per-type distinct-day
     * count is the number of distinct file constants — with the
     * first/last-day bounds and the row count, the "which days do we
@@ -302,7 +271,7 @@ object WeatherZServe {
     * with the same answer (GoldHeartbeatSpec pins both). */
   def q188GoldDayInventory(s: SparkSession, d: String): DataFrame = {
     val tbl = graft.operators.ZCatalog.ensureRegistered(
-      s, d, goldDailyZTable(s, d))
+      s, d, goldAllZTable(s, d))
     s.sql(
       s"""SELECT data_type, COUNT(DISTINCT day) AS n_days,
          |  COUNT(*) AS n_rows,
@@ -341,7 +310,7 @@ object WeatherZServe {
     * observations?") over the multi-type table. Every file's
     * data_type zone is single-valued, so the predicate admits or
     * excludes whole files exactly and the aggregates fold over the
-    * admitted half ([[graft.plans.ZoneAggServe]]'s filtered serve) —
+    * admitted files ([[graft.plans.ZoneAggServe]]'s filtered serve) —
     * zero tasks; a predicate touching any non-single-valued column
     * bails to the ordinary pruned scan, same answer (GoldHeartbeatSpec
     * pins both). Oracle: the same aggregates over the gold_obs CTE. */
@@ -516,13 +485,12 @@ object WeatherZServe {
   private[graft] def goldAllTable(s: SparkSession, d: String): ZTable =
     goldAllZTable(s, d)
 
-  /** Bench prewarm: land gold + build its two layouts (the serve
-    * layout and the daily rollup's) outside the serve queries' timings
-    * (the priced-prewarm convention). */
+  /** Bench prewarm: land gold + build its one layout outside the serve
+    * queries' timings (the priced-prewarm convention). */
   def prewarm(s: SparkSession, d: String): Unit = {
     // per-stage stderr attribution (the [bench]/[lshpairs] convention):
-    // the cold landing + two layout builds are a driver-visible
-    // prewarm key, so the cost split must read from the log
+    // the cold landing + the layout build are a driver-visible prewarm
+    // key, so the cost split must read from the log
     var t0 = System.nanoTime()
     def stamp(which: String): Unit = {
       System.err.println(f"[wxzserve] $which ${(System.nanoTime() - t0) / 1e9}%.3f")
@@ -530,10 +498,7 @@ object WeatherZServe {
     }
     landedGold(s, d)
     stamp("land_gold")
-    // the two layouts are independent builds over the one landed gold
-    // parquet — fan them out, one thread each (guide §2.6; serial they
-    // cost ~1.5 s each, the fan-out then costs their max)
-    ZIndex.ensureAll(s, d, Seq(goldAllZTable(s, d), goldDailyZTable(s, d)))
-    stamp("z_layouts")
+    ZIndex.ensure(s, d, goldAllZTable(s, d))
+    stamp("z_layout")
   }
 }

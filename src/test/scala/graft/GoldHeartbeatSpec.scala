@@ -151,8 +151,8 @@ class GoldHeartbeatSpec extends SparkSpec {
     // DISTINCT over a column that is NOT single-valued per file must
     // bail to the scan — with the unchanged answer
     val real = spark.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith("graft_z_weather_gold_daily"))
-      .headOption.getOrElse(fail("daily gold table not registered"))
+      .map(_.name).filter(_.startsWith("graft_z_weather_gold_all"))
+      .headOption.getOrElse(fail("unified gold table not registered"))
     val bail = spark.sql(s"SELECT data_type, COUNT(DISTINCT postal_code) " +
       s"AS n FROM $real GROUP BY data_type ORDER BY data_type")
     val bailRows = bail.collect().toSeq
@@ -167,22 +167,22 @@ class GoldHeartbeatSpec extends SparkSpec {
   test("multi-key bail: one key non-constant in any file keeps the " +
       "ordinary plan and the unchanged answer") {
     WeatherZServe.q187GoldDailyRollup(spark, Sf).collect()
-    // the UNIFIED (hour-clustered) layout's files are type-pure but
-    // NOT day-pure: the same composite GROUP BY must bail to the scan
-    WeatherZServe.q182GoldHeartbeat(spark, Sf).collect()
+    // the layout's files are pure on data_type but each holds a RANGE
+    // of postal codes: a composite GROUP BY over both must bail to the
+    // scan
     val real = spark.catalog.listTables().collect()
       .map(_.name).filter(_.startsWith("graft_z_weather_gold_all"))
       .headOption.getOrElse(fail("unified gold table not registered"))
-    val df = spark.sql(s"SELECT data_type, CAST(timestamp AS DATE) AS d, " +
-      s"COUNT(*) AS n FROM $real GROUP BY data_type, CAST(timestamp AS " +
-      s"DATE) ORDER BY data_type, d")
+    val df = spark.sql(s"SELECT data_type, postal_code, COUNT(*) AS n " +
+      s"FROM $real GROUP BY data_type, postal_code " +
+      s"ORDER BY data_type, postal_code")
     val rows = df.collect().toSeq
     assert(scans(df.queryExecution.executedPlan).nonEmpty,
-      "a day-impure layout must NOT serve the (type, day) group")
+      "a postal-impure layout must NOT serve the (type, postal) group")
     val truth = WeatherQueries.goldUnified(spark, Sf)
-      .groupBy(col("data_type"), to_date(col("timestamp")).as("d"))
+      .groupBy(col("data_type"), col("postal_code"))
       .agg(count(lit(1)).as("n"))
-      .orderBy(col("data_type"), col("d")).collect().toSeq
+      .orderBy(col("data_type"), col("postal_code")).collect().toSeq
     assert(rows === truth)
   }
 

@@ -10,8 +10,9 @@ import graft.operators.Layout
   *     combination, under heavy group skew (hash partitioning collides
   *     groups; range partitioning straddles boundaries — this must
   *     not);
-  * (2) `subSplits` > 1 spreads a group over several partitions while
-  *     PRESERVING purity;
+  * (2) a file budget above the group count splits each group into
+  *     budget / groups partitions of disjoint, ordered ranges of the
+  *     range column, while PRESERVING purity;
   * (3) NULL key values form their own group;
   * (4) no rows are lost or duplicated. */
 class PartitionPureBySpec extends SparkSpec {
@@ -34,7 +35,7 @@ class PartitionPureBySpec extends SparkSpec {
         else ((i / 5) % 6, if (i % 25 == 0) None else Some(s"k${i % 2}"))
       (g._1.toLong, g._2, i.toLong)
     }.toDF("ga", "gb", "v")
-    val pure = Layout.partitionPureBy(df, Seq("ga", "gb"))
+    val pure = Layout.partitionPureBy(df, Seq("ga", "gb"), "v", nFiles = 1)
     val combos = perPartitionKeyCombos(pure, Seq("ga", "gb"))
     assert(combos.forall(_ <= 1),
       s"every partition must hold at most one key combo, got $combos")
@@ -49,18 +50,37 @@ class PartitionPureBySpec extends SparkSpec {
   test("subSplits spreads a group over several partitions without " +
       "losing purity") {
     import spark.implicits._
-    val df = (0 until 3000).map(i => ((i % 3).toLong, i.toLong))
-      .toDF("g", "v")
-    val pure = Layout.partitionPureBy(df, Seq("g"), subSplits = 4)
+    // 3 groups, a file budget of 12 → 4 postal-like ranges per group;
+    // group 2 skips every other range value and one row has a null one
+    val df = (0 until 3000).map { i =>
+      val g = (i % 3).toLong
+      val r = if (i == 7) None else Some(f"${(i / 3) % 40}%05d")
+      (g, r, i.toLong)
+    }.toDF("g", "r", "v").filter(col("g") =!= 2 || col("r").isNull ||
+      col("r").substr(5, 1).cast("int") % 2 === 0)
+    val pure = Layout.partitionPureBy(df, Seq("g"), "r", nFiles = 12)
+    assert(pure.rdd.getNumPartitions === 12,
+      "3 groups x 12 / 3 ranges each: the file budget")
     val combos = perPartitionKeyCombos(pure, Seq("g"))
-    assert(combos.size === 12 && combos.forall(_ <= 1),
-      s"3 groups x 4 splits, each pure, got $combos")
-    // at least one group actually spreads over >1 partition
-    val partsPerGroup = pure.rdd.mapPartitionsWithIndex((p, it) =>
-      it.map(r => (r.getLong(0), p)).toSet.iterator)
-      .collect().groupBy(_._1).map(_._2.map(_._2).toSet.size)
-    assert(partsPerGroup.exists(_ > 1),
-      s"subSplits must spread groups, got $partsPerGroup")
-    assert(pure.count() === 3000)
+    assert(combos.forall(_ <= 1), s"every partition pure, got $combos")
+    // per partition: (group, min r, max r), nulls left out
+    val spans = pure.rdd.mapPartitionsWithIndex { (p, it) =>
+      val rs = it.toSeq
+      val vs = rs.flatMap(r => Option(r.getString(1)))
+      if (vs.isEmpty) Iterator.empty
+      else Iterator((rs.head.getLong(0), p, vs.min, vs.max))
+    }.collect().toSeq
+    spans.groupBy(_._1).foreach { case (g, ps) =>
+      val ordered = ps.sortBy(_._2)
+      assert(ordered.size === 4,
+        s"group $g must spread over its 4 ranges, got $ordered")
+      ordered.sliding(2).foreach { case Seq(a, b) =>
+        assert(a._4 < b._3,
+          s"group $g: ranges must be disjoint and ordered, got $a then $b")
+      }
+    }
+    assert(pure.collect().map(_.getLong(2)).sorted.toSeq ===
+      df.collect().map(_.getLong(2)).sorted.toSeq,
+      "no rows lost or duplicated")
   }
 }

@@ -4,10 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.weather.{WeatherPipeline, WeatherQueries, WeatherZServe}
-import graft.plans.{StringZone, ZoneMapFileIndex}
+import graft.plans.{LongZone, StringZone, ZoneMapFileIndex}
 
-/** The weather serve path over the z-clustered gold layout (type-pure
-  * per file: every file's data_type zone is single-valued). Pins:
+/** The weather serve path over the gold layout ((type, day)-pure per
+  * file, range-split on postal_code: every file's data_type zone is
+  * single-valued). Pins:
   * (1) q27's (postal, time-window) predicate opens files_opened ≪
   *     observation files through the FileIndex — the reference's
   *     composite B-tree serve path (`sql/schema.sql:278-305`) as zone
@@ -29,8 +30,8 @@ import graft.plans.{StringZone, ZoneMapFileIndex}
   *     are all of its own data_type;
   * (7) a corpus changed in place is served from its new landing's
   *     generation, and each session gets its own relation;
-  * (8) the prewarm builds exactly two gold layouts: the serve layout
-  *     (16 files per type) and the daily rollup's.
+  * (8) the prewarm builds exactly one gold layout, every file of it
+  *     single-valued on both data_type and day.
   * Files opened are read from each query's own executed plan (the scan's
   * `numFiles` metric), not from the shared indexes' last-listing
   * counters, which every request over the held relation overwrites. */
@@ -313,15 +314,24 @@ class WeatherZServeSpec extends SparkSpec {
       WeatherZServe.prewarm(ext, dir)
       val Seq(corpusGold) = names(java.nio.file.Paths.get(goldDir))
       assert(names(java.nio.file.Paths.get(goldDir, corpusGold))
-        .filter(_.startsWith("z_")) === Seq("z_daily", "z_gold"),
-        "the prewarm must leave exactly two layout roots")
+        .filter(_.startsWith("z_")) === Seq("z_day"),
+        "the prewarm must leave exactly one layout root")
       val idx = WeatherZServe.zGoldWithIndex(ext, dir)._2
+      val impure = idx.currentEntries.filterNot(e =>
+        Seq("data_type", "day").forall(c => e.cols.get(c).exists {
+          case StringZone(lo, hi, 0) => lo == hi
+          case LongZone(lo, hi, 0) => lo == hi
+          case _ => false
+        }))
+      assert(impure.isEmpty,
+        s"every layout file must hold one data_type and one day " +
+          s"(got ${impure.map(_.cols)})")
       val perType = idx.currentEntries.groupBy(_.cols.get("data_type"))
         .map { case (z, es) => z -> es.size }
       assert(perType.keySet === Set(typeZone("observation"),
         typeZone("forecast")) && perType.values.forall(_ <= 16),
-        s"every serve-layout file must hold one data_type, at most 16 " +
-          s"files per type (got $perType)")
+        s"both types must be laid out, at most 16 files per type " +
+          s"(got $perType)")
     }
   }
 }
