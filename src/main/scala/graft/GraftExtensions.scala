@@ -62,6 +62,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // registered). Runs AFTER Catalyst's own reorder batch, so with CBO
     // on the exact numbers have the last word.
     ext.injectOptimizerRule(_ => graft.plans.StarAliasReorder)
+    // a zone-bounded read over a served gold relation runs on the
+    // calling thread, with no Spark job (no-op until a relation is
+    // registered, and above the row cap)
+    ext.injectPlannerStrategy(_ => graft.plans.LocalServe)
   }
 }
 

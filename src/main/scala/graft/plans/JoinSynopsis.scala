@@ -100,6 +100,32 @@ object JoinSynopsis {
     } finally { freq.unpersist(); () }
   }
 
+  /** [[build]] over a KB-scale table (a dimension), from ONE
+    * driver-side collect of (md5(key), key) instead of its five jobs
+    * (the cached aggregate, its ordered limit, its total): the same
+    * fields, by the same null-key contract (JoinSynopsisCollectedSpec
+    * pins the equality field by field). The key bounds compare string
+    * keys by their UTF-8 bytes, as Spark's min/max do, and other keys
+    * by their natural order. Every row reaches the driver. */
+  def collected(name: String, df: DataFrame, key: Column,
+      k: Int = K): KeySynopsis = {
+    val rows = df.select(md5(key.cast("string")).as("h"), key.as("kv"),
+        key.cast("string").as("ks"))
+      .filter(col("h").isNotNull).collect()
+    val kept = rows.groupMapReduce(_.getString(0))(_ => 1L)(_ + _)
+      .toVector.sortBy(_._1).take(k)
+    val keys = rows.map(r => r.get(1) -> r.getString(2))
+    val ord: Ordering[Any] = {
+      case (a: String, b: String) =>
+        org.apache.spark.unsafe.types.UTF8String.fromString(a)
+          .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
+      case (a: Comparable[Any] @unchecked, b) => a.compareTo(b)
+    }
+    KeySynopsis(name, rows.length.toLong, k, kept,
+      keys.minByOption(_._1)(ord).map(_._2),
+      keys.maxByOption(_._1)(ord).map(_._2))
+  }
+
   /** Per-type KEY synopses over md5(user_id) served ENTIRELY from the
     * maintained sketch table ([[graft.operators.KmvTable.keyStatsView]])
     * — the join-synopsis ANALYZE whose corpus scan already happened.

@@ -89,13 +89,21 @@ class ZoneMapFileIndex(root: Path,
   override def refresh(): Unit = { entries = resolve(); () }
 
   override def listFiles(partitionFilters: Seq[Expression],
-      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(InternalRow.empty,
+      keptFiles(dataFilters).map(_.status).toArray))
+
+  /** The zone-map entries `dataFilters` cannot refute: the files
+    * [[listFiles]] keeps, with their row counts
+    * ([[LocalServe]] sizes a request by them). */
+  private[graft] def keptFiles(dataFilters: Seq[Expression])
+      : IndexedSeq[ZoneFile] = {
     val es = entries
     val kept = es.filter(e =>
       dataFilters.forall(f => ZoneMapFileIndex.mayMatch(f, e.cols)))
     lastTotal.set(es.size)
     lastKept.set(kept.size)
-    Seq(PartitionDirectory(InternalRow.empty, kept.map(_.status).toArray))
+    kept
   }
 }
 

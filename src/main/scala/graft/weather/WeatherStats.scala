@@ -11,7 +11,7 @@ import graft.plans.{JoinSynopsis, SynopsisStats}
   * `broadcast()` hints — the builder telling the planner what to do.
   * Those hints are gone ([[WeatherPipeline.aggregateToPostal]]); the
   * dimension sides now come from CATALOG tables whose statistics are
-  * injected from their synopses ([[JoinSynopsis.build]] →
+  * injected from their synopses ([[JoinSynopsis.collected]] →
   * [[SynopsisStats.inject]] — rowCount, key NDV/bounds, honest
   * sizeInBytes), and Spark's own threshold planning makes the
   * broadcast decision from those numbers (WeatherStatsSpec pins the
@@ -22,7 +22,8 @@ import graft.plans.{JoinSynopsis, SynopsisStats}
   *
   * The dims are KB-scale (reference `sql/schema.sql:12-45` — stations
   * and postal polygons are small reference tables), so one tiny scan
-  * at registration IS their ANALYZE. Registration is memoized per
+  * at registration IS their ANALYZE: one collect per dim, each
+  * synopsis folded on the driver. Registration is memoized per
   * (shared catalog, corpus) on the SOURCE tables' file-identity stamp
   * (r12 verdict #3: the DDL + two synopsis builds + two catalog
   * injections used to re-run on every gold build, sitting on the hot
@@ -129,10 +130,12 @@ object WeatherStats {
         """postal_code STRING, city STRING,
           |centroid_lat DOUBLE, centroid_lon DOUBLE""".stripMargin,
         s"$root/postal")
-      val synSt = JoinSynopsis.build(stTbl, s.table(stTbl), col("station_id"))
+      val synSt =
+        JoinSynopsis.collected(stTbl, s.table(stTbl), col("station_id"))
       SynopsisStats.inject(s, stTbl, synSt.rows,
         Map("station_id" -> synSt), avgRowBytes = 64)
-      val synPc = JoinSynopsis.build(pcTbl, s.table(pcTbl), col("postal_code"))
+      val synPc =
+        JoinSynopsis.collected(pcTbl, s.table(pcTbl), col("postal_code"))
       SynopsisStats.inject(s, pcTbl, synPc.rows,
         Map("postal_code" -> synPc), avgRowBytes = 48)
       dimMemo.put(memoKey, stamp)

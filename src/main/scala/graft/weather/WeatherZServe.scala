@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Layout, ZIndex, ZTable}
 import WeatherStats.id8
-import graft.plans.ZoneMapFileIndex
+import graft.plans.{LocalServe, ZoneMapFileIndex}
 import graft.util.Generations
 
 /** The weather SERVE path riding the z-skipping layer: gold — the
@@ -29,7 +29,9 @@ import graft.util.Generations
   * (WeatherZServeSpec pins files_opened ≪ files_total AND result
   * parity with the in-memory pipeline frames; the driver oracles
   * q24/q25/q27 against unchanged SQL — the results do not move, only
-  * the scan does).
+  * the scan does). A request whose kept files are few is read on the
+  * calling thread with no Spark job ([[graft.plans.LocalServe]], in a
+  * session with the extensions).
   *
   * The layout rides [[ZIndex]] maintenance ([[graft.util.Generations]]:
   * committed generations, mutation → rebuild) over a
@@ -92,7 +94,8 @@ object WeatherZServe {
     *   2. a ZIndex root lock — the layout build behind it;
     *   3. the gold landing's path lock ([[Generations.landOnce]]);
     *   4. the entry's monitor — building one of its frames (builders
-    *      nest: goldObs builds stgObs), or retiring it;
+    *      nest: goldObs builds stgObs), holding a new serve relation,
+    *      or retiring it;
     *   5. the bronze landing's path lock, or WeatherStats.dims' lock
     *      (then its dim landings' path locks).
     * Hits take none of them: the generation map, the frames and the
@@ -130,6 +133,7 @@ object WeatherZServe {
     private[WeatherZServe] def retire(): Unit = synchronized {
       retired = true
       frames.values.forEach(_.unpersist(blocking = false))
+      Option(served).foreach(e => LocalServe.release(e.idx))
     }
 
     /** The landed bronze events feed: the raw corpus ships ts as INT64
@@ -159,6 +163,16 @@ object WeatherZServe {
 
     @volatile private[WeatherZServe] var served: Served = _
     private[WeatherZServe] val serveLock = new Object
+
+    /** Serve `e` from now on, releasing the relation it replaces; its
+      * bounded reads run on the calling thread ([[LocalServe]]) until
+      * it is replaced or this generation retires. A retired generation
+      * serves `e` through the ordinary scan. */
+    private[WeatherZServe] def hold(e: Served): Unit = synchronized {
+      Option(served).foreach(o => LocalServe.release(o.idx))
+      if (!retired) LocalServe.serve(e.idx)
+      served = e
+    }
   }
 
   /** The corpus tables gold derives from: the weather feed plus both
@@ -237,7 +251,23 @@ object WeatherZServe {
       // z-ordered `z_gold` of older builds: ZIndex keys a generation on
       // its feed, not on the clustering, so a durable `z_gold` would be
       // reused as is
-      rootOverride = Some(s"${goldRoot(s)}/${id8(d)}/z_day"))
+      rootOverride = Some(s"${goldRoot(s)}/${id8(d)}/$LayoutRoot"))
+
+  /** The gold layout's root name under `<gold root>/<corpus id8>/`. */
+  private val LayoutRoot = "z_day"
+
+  /** Delete the sibling `z_*` roots older builds left beside
+    * [[LayoutRoot]] (`z_obs`, `z_for`, `z_all`, `z_gold`, `z_daily`):
+    * each holds a full copy of gold that nothing reads. Runs before
+    * every layout resolve of [[served]] and [[prewarm]]; a driver-side
+    * listing, no Spark job. */
+  private def sweepStaleLayouts(s: SparkSession, d: String): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(s"${goldRoot(s)}/${id8(d)}")
+    val fs = Generations.fsOf(s, dir.toString)
+    if (fs.exists(dir)) fs.listStatus(dir).map(_.getPath)
+      .filter(p => p.getName.startsWith("z_") && p.getName != LayoutRoot)
+      .foreach(fs.delete(_, true))
+  }
 
   /** q187 — the MULTI-KEY grouped metadata serve (r15 verdict #3): the
     * daily layer report — `GROUP BY data_type, day` — over the
@@ -353,14 +383,15 @@ object WeatherZServe {
     else g.serveLock.synchronized {
       if (!fresh(g.served)) { // else built while this thread waited
         servedBuilds.incrementAndGet()
+        sweepStaleLayouts(s, d)
         val t = goldAllZTable(s, d)
         val (df, idx) = ZIndex.zFrame(s, d, t)
         // a memo hit: the generation the index just resolved
         val (root, gen) = ZIndex.ensure(s, d, t)
         val es = idx.currentEntries
-        g.served = Served(df, idx, root, gen,
+        g.hold(Served(df, idx, root, gen,
           zoneMax(es, "observation", "timestamp"),
-          zoneMax(es, "forecast", "forecast_timestamp"))
+          zoneMax(es, "forecast", "forecast_timestamp")))
       }
       g.served
     }
@@ -498,6 +529,7 @@ object WeatherZServe {
     }
     landedGold(s, d)
     stamp("land_gold")
+    sweepStaleLayouts(s, d)
     ZIndex.ensure(s, d, goldAllZTable(s, d))
     stamp("z_layout")
   }

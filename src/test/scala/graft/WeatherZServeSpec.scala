@@ -1,10 +1,14 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileIndex,
+  HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.weather.{WeatherPipeline, WeatherQueries, WeatherZServe}
-import graft.plans.{LongZone, StringZone, ZoneMapFileIndex}
+import graft.plans.{LocalServe, LocalServeExec, LongZone, StringZone,
+  ZoneMapFileIndex}
 
 /** The weather serve path over the gold layout ((type, day)-pure per
   * file, range-split on postal_code: every file's data_type zone is
@@ -22,34 +26,54 @@ import graft.plans.{LongZone, StringZone, ZoneMapFileIndex}
   * (4) every serve query equals its in-memory pipeline computation —
   *     the layout moves the scan, never the answer (the driver's
   *     unchanged oracles pin the same thing against DuckDB);
-  * (5) a warm API request (history, forecast horizon, latest
-  *     observations, latest forecasts) launches exactly ONE Spark job,
+  * (5) in a session with [[GraftExtensions]], a warm API request
+  *     (history, forecast horizon, latest observations, latest
+  *     forecasts) under [[LocalServe.MaxRows]] launches NO Spark job —
+  *     it is answered on the calling thread ([[LocalServeExec]]) — and
+  *     a request whose kept files hold more rows launches exactly one,
   *     its query: no per-call schema inference, no range-sort jobs;
   * (6) a warm request reuses the held relation (one source stamp, no
-  *     rebuild), and every endpoint plans ONE scan whose kept files
-  *     are all of its own data_type;
+  *     rebuild), and every endpoint plans ONE zone read over the gold
+  *     layout whose kept files are all of its own data_type;
   * (7) a corpus changed in place is served from its new landing's
   *     generation, and each session gets its own relation;
   * (8) the prewarm builds exactly one gold layout, every file of it
-  *     single-valued on both data_type and day.
-  * Files opened are read from each query's own executed plan (the scan's
-  * `numFiles` metric), not from the shared indexes' last-listing
-  * counters, which every request over the held relation overwrites. */
+  *     single-valued on both data_type and day, and sweeps the sibling
+  *     layout roots older builds left.
+  * Files opened are read from each query's own executed plan (the
+  * `numFiles` metric of its scan or of its local node, [[reads]]),
+  * not from the shared indexes' last-listing counters, which every
+  * request over the held relation overwrites. */
 class WeatherZServeSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  /** The executed zone-mapped scans of an already-collected frame, with
-    * the files each opened. */
-  private def zoneScans(df: DataFrame): Seq[(ZoneMapFileIndex, Long)] =
-    fileScans(df.queryExecution.executedPlan).map(s =>
-      (s.relation.location, s.metrics("numFiles").value)).collect {
-      case (i: ZoneMapFileIndex, n) => (i, n)
+  /** One session with the extensions for the whole suite, so its serve
+    * generation is built once. */
+  private lazy val ext: SparkSession = withExtSession(identity)
+
+  /** The file reads of an already-collected frame — each
+    * `FileSourceScanExec` and each [[LocalServeExec]] — as (index, the
+    * files it kept, its `numFiles` metric). A scan's kept files are its
+    * index re-listed with the scan's own pushed data filters. */
+  private def reads(df: DataFrame): Seq[(FileIndex, Seq[Path], Long)] = {
+    val p = df.queryExecution.executedPlan
+    val scans = fileScans(p).map { s =>
+      val i = s.relation.location
+      (i, i.listFiles(Nil, s.dataFilters).flatMap(_.files).map(_.getPath),
+        s.metrics("numFiles").value)
     }
+    val locals = p.collect { case l: LocalServeExec =>
+      val i = l.plan.collectFirst { case r: LogicalRelation =>
+        r.relation.asInstanceOf[HadoopFsRelation].location }.get
+      (i, l.files.map(_.getPath), l.metrics("numFiles").value)
+    }
+    scans ++ locals
+  }
 
   /** Files the query opened through `idx`. */
   private def opened(df: DataFrame, idx: ZoneMapFileIndex): Long =
-    zoneScans(df).collect { case (i, n) if i eq idx => n }.sum
+    reads(df).collect { case (i, _, n) if i eq idx => n }.sum
 
   private def typeZone(which: String) = Some(StringZone(which, which, 0))
 
@@ -57,29 +81,24 @@ class WeatherZServeSpec extends SparkSpec {
   private def typeFiles(idx: ZoneMapFileIndex, which: String): Int =
     idx.currentEntries.count(_.cols.get("data_type") == typeZone(which))
 
-  /** True when `df`'s plan scans only through zone-mapped indexes and
-    * every file each scan keeps is of data_type `which`: the scan's
-    * index re-listed with that scan's own pushed data filters, each
-    * kept file looked up in the index's zone map by path. */
+  /** True when `df`'s plan reads only through zone-mapped indexes and
+    * every file each read keeps is of data_type `which`, each kept file
+    * looked up in the index's zone map by path. */
   private def keepsOnly(df: DataFrame, which: String): Boolean = {
-    val scans = fileScans(df.queryExecution.executedPlan)
-    scans.nonEmpty && scans.forall { scan =>
-      scan.relation.location match {
-        case idx: ZoneMapFileIndex =>
-          val zones = idx.currentEntries
-            .map(e => e.status.getPath -> e.cols.get("data_type")).toMap
-          val kept = idx.listFiles(Nil, scan.dataFilters)
-            .flatMap(_.files).map(f => zones(f.getPath))
-          kept.nonEmpty && kept.forall(_ == typeZone(which))
-        case _ => false
-      }
+    val rs = reads(df)
+    rs.nonEmpty && rs.forall {
+      case (idx: ZoneMapFileIndex, kept, _) =>
+        val zones = idx.currentEntries
+          .map(e => e.status.getPath -> e.cols.get("data_type")).toMap
+        kept.nonEmpty && kept.forall(f => zones(f) == typeZone(which))
+      case _ => false
     }
   }
 
   test("q27 history rides the zone-mapped relation: postal + window " +
       "prune most files and the forecast layout is refuted entirely; " +
       "rows identical to the in-memory gold") {
-    val (zdf, idx) = WeatherZServe.zGoldWithIndex(spark, dir)
+    val (zdf, idx) = WeatherZServe.zGoldWithIndex(ext, dir)
     val served = WeatherPipeline.history(zdf, "10011", 72, 24)
       .orderBy(col("timestamp"))
     val zRows = served.collect().toSeq
@@ -99,7 +118,7 @@ class WeatherZServeSpec extends SparkSpec {
 
   test("q177 region rollup: the postal PREFIX pushes as StartsWith, " +
       "prunes files, and equals the in-memory computation") {
-    val (zdf, idx) = WeatherZServe.zGoldWithIndex(spark, dir)
+    val (zdf, idx) = WeatherZServe.zGoldWithIndex(ext, dir)
     def rollup(df: org.apache.spark.sql.DataFrame) = df
       .filter(col("data_type") === "observation" &&
         col("postal_code").startsWith("1001") &&
@@ -151,7 +170,7 @@ class WeatherZServeSpec extends SparkSpec {
       "returns exactly the in-memory frames' rows") {
     val gold = WeatherQueries.goldUnified(spark, dir)
 
-    val (obsDf, obsIdx) = WeatherZServe.latestObsServed(spark, dir)
+    val (obsDf, obsIdx) = WeatherZServe.latestObsServed(ext, dir)
     val obsQ = obsDf.orderBy(col("postal_code"))
     val zObs = obsQ.collect().toSeq
     val mObs = WeatherPipeline.latestObservations(gold)
@@ -163,7 +182,7 @@ class WeatherZServeSpec extends SparkSpec {
       s"the max-timestamp literal must open a strict minority of " +
         s"files (${opened(obsQ, obsIdx)} of $obsTotal)")
 
-    val (fcDf, fcIdx) = WeatherZServe.latestFcServed(spark, dir)
+    val (fcDf, fcIdx) = WeatherZServe.latestFcServed(ext, dir)
     val fcQ = fcDf.orderBy(col("postal_code"), col("target_time"))
     val zFc = fcQ.collect().toSeq
     val mFc = WeatherPipeline.latestForecasts(gold)
@@ -178,31 +197,84 @@ class WeatherZServeSpec extends SparkSpec {
   }
 
   /** The four API endpoints as (name, a fresh request over the
-    * z-laid-out gold, the same endpoint over plain gold, the data_type
-    * whose files alone its scan may keep). */
-  private def endpoints(): Seq[(String, () => DataFrame, DataFrame,
-      String)] = {
+    * z-laid-out gold of session `s`, the same endpoint over plain gold,
+    * the data_type whose files alone its read may keep). */
+  private def endpoints(s: SparkSession = spark): Seq[(String,
+      () => DataFrame, DataFrame, String)] = {
     val plain = WeatherQueries.goldUnified(spark, dir)
     val from = lit("2024-01-28 00:00:00").cast("timestamp")
     Seq(
       ("history", () => WeatherPipeline.history(
-          WeatherZServe.zGold(spark, dir), "10011", 72, 24),
+          WeatherZServe.zGold(s, dir), "10011", 72, 24),
         WeatherPipeline.history(plain, "10011", 72, 24),
         "observation"),
       ("horizon", () => WeatherPipeline.forecastHorizon(
-          WeatherZServe.zGold(spark, dir), "10011", from, 48),
+          WeatherZServe.zGold(s, dir), "10011", from, 48),
         WeatherPipeline.forecastHorizon(plain, "10011", from, 48),
         "forecast"),
-      ("latestObs", () => WeatherQueries.latestObs(spark, dir),
+      ("latestObs", () => WeatherQueries.latestObs(s, dir),
         WeatherPipeline.latestObservations(plain)
           .orderBy(col("postal_code")), "observation"),
-      ("latestFc", () => WeatherQueries.latestFc(spark, dir),
+      ("latestFc", () => WeatherQueries.latestFc(s, dir),
         WeatherPipeline.latestForecasts(plain)
           .orderBy(col("postal_code"), col("target_time")), "forecast"))
   }
 
+  test("with the extensions, a warm API request under the row cap " +
+      "launches no Spark job, reads only its own type's files on the " +
+      "calling thread and returns the endpoint's rows over plain gold") {
+    endpoints(ext).foreach { case (name, served, truth, which) =>
+      served().collect() // warm: lands gold, builds the layout
+      val df = served()
+      val (rows, jobs) = countJobs(df.collect().toSeq)
+      assert(jobs === 0,
+        s"$name: a warm request under the cap must launch no Spark job")
+      assert(rows.nonEmpty && rows === truth.collect().toSeq,
+        s"$name: the served rows must equal the endpoint over plain gold")
+      assert(df.queryExecution.executedPlan.isInstanceOf[LocalServeExec],
+        s"$name: the plan must be the local node " +
+          s"(got ${df.queryExecution.executedPlan})")
+      assert(keepsOnly(df, which),
+        s"$name: the local read must keep only $which files")
+    }
+  }
+
+  test("with the extensions, a request whose kept files hold more rows " +
+      "than the cap launches exactly one Spark job, its scan, and " +
+      "returns the same rows") {
+    // the held layout's own files behind an index whose zone map counts
+    // one row more than the cap in every file: every kept set is over it
+    val idx0 = WeatherZServe.zGoldWithIndex(ext, dir)._2
+    val big = new ZoneMapFileIndex(idx0.rootPaths.head, () =>
+      idx0.currentEntries.map(_.copy(rows = LocalServe.MaxRows + 1)))
+    LocalServe.serve(big)
+    try {
+      val rel = HadoopFsRelation(big, new org.apache.spark.sql.types.StructType(),
+        WeatherZServe.zGold(ext, dir).schema, None,
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+        Map.empty[String, String])(
+        ext.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
+      val gold = ext.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .baseRelationToDataFrame(rel)
+      def history() = WeatherPipeline.history(gold, "10011", 72, 24)
+      history().collect() // warm
+      val df = history()
+      val (rows, jobs) = countJobs(df.collect().toSeq)
+      assert(jobs === 1,
+        "a request above the cap must launch exactly one Spark job")
+      assert(fileScans(df.queryExecution.executedPlan).size === 1 &&
+        df.queryExecution.executedPlan.collect { case l: LocalServeExec => l }
+          .isEmpty, "a request above the cap must plan the ordinary scan")
+      assert(rows.nonEmpty && rows === WeatherPipeline.history(
+          WeatherQueries.goldUnified(spark, dir), "10011", 72, 24)
+        .collect().toSeq,
+        "the scanned rows must equal the endpoint over plain gold")
+    } finally LocalServe.release(big)
+  }
+
   test("a warm API request launches exactly one Spark job and returns " +
       "the endpoint's rows over plain gold") {
+    // a session without the extensions plans every request as a scan
     endpoints().foreach { case (name, served, truth, _) =>
       served().collect() // warm: lands gold, builds the layouts
       val (rows, jobs) = countJobs(served().collect().toSeq)
@@ -332,6 +404,36 @@ class WeatherZServeSpec extends SparkSpec {
         typeZone("forecast")) && perType.values.forall(_ <= 16),
         s"both types must be laid out, at most 16 files per type " +
           s"(got $perType)")
+    }
+  }
+
+  test("the next layout build sweeps the z_* roots older builds left " +
+      "beside z_day and keeps the landing") {
+    val goldDir = TempDirs.create("wx_serve_sweep_gold_")
+    def names(p: java.nio.file.Path): Seq[String] = {
+      val ls = java.nio.file.Files.list(p)
+      try ls.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path]
+        .getFileName.toString).sorted
+      finally ls.close()
+    }
+    withExtSession { s =>
+      s.conf.set("spark.graft.weather.goldDir", goldDir)
+      WeatherZServe.prewarm(s, dir)
+      val Seq(corpusGold) = names(java.nio.file.Paths.get(goldDir))
+      val root = java.nio.file.Paths.get(goldDir, corpusGold)
+      val before = names(root)
+      // what an older build leaves: a committed generation of a
+      // superseded layout root
+      Seq("z_gold", "z_daily").foreach { z =>
+        val gen = java.nio.file.Files.createDirectories(root.resolve(s"$z/gen-0"))
+        java.nio.file.Files.createFile(gen.resolve("_COMMITTED"))
+      }
+      assert(names(root) === (before ++ Seq("z_daily", "z_gold")).sorted)
+      WeatherZServe.prewarm(s, dir)
+      assert(names(root) === before && before.contains("z_day") &&
+        before.exists(!_.startsWith("z_")),
+        "the build must delete every superseded z_* root and keep the " +
+          s"layout and the gold landing (got ${names(root)})")
     }
   }
 }
